@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute system load from /proc/loadavg (-1.0 where unreadable —
     * non-Linux or restricted container). Captured at process start
@@ -42,18 +41,7 @@ object Bench {
     val loadBefore = loadAvg1m()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.optimizer.excludedRules", EngineConf.ExcludedOptimizerRules)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        EngineConf.CanChangeCachedPlanPartitioning)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        EngineConf.AqeMinPartitionSize)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = EngineConf.session(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional args select a query subset (scale experiments); the
     // driver's no-arg invocation runs everything

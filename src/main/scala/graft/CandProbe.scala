@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-timing probe for the verified-MinHash dedup path
@@ -34,18 +33,7 @@ object CandProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     require(cpus.nonEmpty && cpus.forall(_.isDigit) && cpus.toInt > 0,
       s"SPARK_GRAFT_CPUS must be a positive integer, got '$cpus'")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.optimizer.excludedRules", EngineConf.ExcludedOptimizerRules)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        EngineConf.CanChangeCachedPlanPartitioning)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        EngineConf.AqeMinPartitionSize)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = EngineConf.session(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.ops.Dedup
 

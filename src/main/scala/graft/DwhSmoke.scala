@@ -1,21 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
 /** One-shot CLI smoke for the full bank DWH assembly. */
 object DwhSmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.optimizer.excludedRules", EngineConf.ExcludedOptimizerRules)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        EngineConf.CanChangeCachedPlanPartitioning)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        EngineConf.AqeMinPartitionSize)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = EngineConf.session(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val schema =
       """UniqueID string, disbursed_amount double, asset_cost double, ltv double,

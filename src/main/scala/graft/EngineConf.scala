@@ -1,8 +1,28 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+
 /** Engine-wide Spark tuning shared by every entry point (Bench, Verify,
   * Explain, smoke mains, test harness). */
 object EngineConf {
+
+  /** The pre-configured session builder every entry point starts from:
+    * `local[cores]` with `cores` shuffle partitions, the three tunings
+    * below, UTC session time, no UI, and nanosecond parquet timestamps
+    * read as longs. Callers add their own app name, extensions and
+    * local dirs. */
+  def session(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
+      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+        CanChangeCachedPlanPartitioning)
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        AqeMinPartitionSize)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
   /** `InferFiltersFromGenerate` inserts a `size(input) > 0 AND
     * isnotnull(input)` pre-filter under every explode. Semantics are

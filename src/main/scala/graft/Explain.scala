@@ -23,17 +23,7 @@ object Explain {
       case _ => ("/root/testdata/sf0.001", args.toSeq)
     }
     val names = if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.optimizer.excludedRules", EngineConf.ExcludedOptimizerRules)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        EngineConf.CanChangeCachedPlanPartitioning)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        EngineConf.AqeMinPartitionSize)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = EngineConf.session(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach {
       case "stream-smoke" => streamSmoke(spark)

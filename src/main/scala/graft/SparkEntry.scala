@@ -983,7 +983,8 @@ object SparkEntry {
     // lineage (tokenize → shingle → 64 packed vote aggregates), and the
     // analyzer/optimizer re-walked it inside the operator, the exact
     // reference, AND the two exceptAll diff branches — measured 1.03 s
-    // of off-execution driver time on this gate (GateProfile, r21).
+    // of off-execution driver time on this gate
+    // (`perfbench/run.py --trace 1`).
     // The checkpoint truncates to a LogicalRDD leaf: same blocks, same
     // single materialization, O(1)-sized leaf in all four consumers.
     val sim = Dedup.simhash(docs, "doc_id", "text").localCheckpoint(false)

@@ -3,11 +3,9 @@ package graft.model
 import org.apache.spark.sql.SparkSession
 
 /** The shared session + timing harness of the measurement mains
-  * ([[BandedProbeBench]], [[IvfProbeBench]], [[DeltaAppendBench]],
-  * [[SpreadCalibrate]]) — one place for the bench session's
-  * configuration so a config change (a new excluded rule, a partition
-  * count) cannot leave one main silently measuring a differently
-  * configured engine. */
+  * ([[BandedProbeBench]], [[DeltaAppendBench]], [[SpreadCalibrate]]):
+  * the [[graft.EngineConf.session]] builder with the graft extensions,
+  * so no main can silently measure a differently configured engine. */
 private[model] object BenchHarness {
 
   /** The standard local bench session: `SPARK_GRAFT_CPUS` threads
@@ -20,18 +18,8 @@ private[model] object BenchHarness {
       .orElse(sys.env.get("SPARK_GRAFT_SF_DIR"))
       .getOrElse(defaultDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.EngineConf.session(cpus.toInt)
       .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.optimizer.excludedRules", graft.EngineConf.ExcludedOptimizerRules)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        graft.EngineConf.CanChangeCachedPlanPartitioning)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        graft.EngineConf.AqeMinPartitionSize)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     (spark, dir)

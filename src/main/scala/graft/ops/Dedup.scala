@@ -733,11 +733,12 @@ object Dedup {
     * the 24-element band-hash arrays — and the analyzer re-walks it in
     * every one of the ~25 downstream Dataset constructions the probe
     * tree makes per micro-batch, measured as ~0.9 s of off-execution
-    * driver time per probe (GateProfile, r20) plus AQE re-optimization
-    * cost per stage inside the execution. The checkpoint truncates to a
-    * LogicalRDD: same blocks, same single materialization, O(1)-sized
-    * leaf in every downstream plan. Lazy — the probe's own first action
-    * computes every partition and persists the blocks itself. */
+    * driver time per probe (`perfbench/run.py --trace 1`) plus AQE
+    * re-optimization cost per stage inside the execution. The
+    * checkpoint truncates to a LogicalRDD: same blocks, same single
+    * materialization, O(1)-sized leaf in every downstream plan. Lazy —
+    * the probe's own first action computes every partition and persists
+    * the blocks itself. */
   private def probeSides(index: DataFrame, batch: DataFrame,
       idCol: String, textCol: String, shingleK: Int, numBands: Int,
       rowsPerBand: Int, maxGroupSize: Int): (DataFrame, DataFrame, DataFrame) = {

@@ -42,7 +42,8 @@ import org.apache.spark.sql.functions._
   * `full`). Doubles round-trip
   * parquet bit-exactly, so a reloaded version probes identically
   * (spec-pinned). */
-object IvfIndexStore {
+object IvfIndexStore extends CellIndexStore("ivf index",
+    Seq("dim", "nlist", "assign_p50", "assign_p99")) {
 
   /** Persisted provenance: embedding dimension, trained cell count,
     * the TRAIN-TIME assign-distance quantiles (p50/p99 of
@@ -55,7 +56,16 @@ object IvfIndexStore {
     * version (append). */
   final case class IvfMeta(dim: Int, nlist: Int,
                            assignP50: Double, assignP99: Double,
-                           full: Boolean)
+                           full: Boolean) extends CellMeta
+
+  type Meta = IvfMeta
+
+  protected def encodeMeta(m: IvfMeta): Seq[Any] =
+    Seq[Any](m.dim, m.nlist, m.assignP50, m.assignP99)
+
+  protected def decodeMeta(s: Seq[Any], full: Boolean): IvfMeta =
+    IvfMeta(s(0).asInstanceOf[Int], s(1).asInstanceOf[Int],
+      s(2).asInstanceOf[Double], s(3).asInstanceOf[Double], full)
 
   /** A committed version loaded for probing: `cells` is the UNION of
     * the version's chain (its deltas down to the nearest full
@@ -64,291 +74,69 @@ object IvfIndexStore {
                                   centroids: Seq[(Long, Seq[Double])],
                                   cells: DataFrame, meta: IvfMeta)
 
-  private val Subframes = Seq("centroids", "cells", "meta")
-
-  def latestVersion(spark: SparkSession, dir: String): Option[Long] =
-    VersionedState.latestVersion(spark, dir, Subframes)
-
-  private def writeMeta(spark: SparkSession, dest: String, meta: IvfMeta): Unit = {
-    import spark.implicits._
-    // written with the SAME column list the readers require, so the
-    // write and the requireMetaCols valve can never drift apart
-    Seq((meta.dim, meta.nlist, meta.assignP50, meta.assignP99, meta.full))
-      .toDF(MetaCols: _*)
-      .coalesce(1).write.mode("overwrite").parquet(dest)
-  }
-
-  private val MetaCols = Seq("dim", "nlist", "assign_p50", "assign_p99", "full")
-
-  private def readMeta(spark: SparkSession, dir: String, v: Long): IvfMeta = {
-    // memoized ([[VersionedState.cachedMetaRow]]): chain walks and the
-    // verbs re-read this one immutable row constantly — each re-read
-    // was a parquet footer decode plus a one-row Spark job
-    val s = VersionedState.cachedMetaRow(spark, dir, v, MetaCols,
-      s"ivf index at $dir v=$v")
-    IvfMeta(s(0).asInstanceOf[Int], s(1).asInstanceOf[Int],
-      s(2).asInstanceOf[Double], s(3).asInstanceOf[Double],
-      s(4).asInstanceOf[Boolean])
-  }
-
-  private def commitVersion(spark: SparkSession, dir: String, v: Long,
-                            centroids: Seq[(Long, Seq[Double])],
-                            cells: DataFrame, meta: IvfMeta): Unit =
-    VersionedState.commitVersion(spark, dir, v, "ivf index",
-      Subframes) { scratch =>
-      // three independent payloads, overlapped
-      // ([[VersionedState.writeConcurrently]]): the cell write is the
-      // data job; the coalesce(1) centroid and meta writes are pure
-      // fixed cost that no longer serializes behind it
-      VersionedState.writeConcurrently(Seq(
-        () => Similarity.ivfCentroidsDf(spark, centroids)
-          .coalesce(1).write.mode("overwrite").parquet(s"$scratch/centroids"),
-        () => {
-          // the cell frame's on-disk layout IS the probe's scale story:
-          // partitioned by cell, a probe batch reads only its touched
-          // cell directories (nprobe/nlist of the corpus), pruned by the
-          // static IN filter probeLatest derives — not a full scan that a
-          // join then discards. The repartition co-locates each cell in
-          // one writer task BEFORE partitionBy: without it every task
-          // writes a sliver of every cell it holds — task_count × nlist
-          // small files at cluster scale — where co-located cells write
-          // one file each. One shuffle per COMMIT (over delta mass for
-          // appends, corpus mass only at init/compaction), zero per probe.
-          cells.repartition(col("cell"))
-            .write.partitionBy("cell").mode("overwrite").parquet(s"$scratch/cells")
-          // an EMPTY cell-partitioned write leaves a file-less frame every
-          // later chain read fails to schema-infer — appends no-op on empty
-          // batches, so the only way here is a compact whose tombstones
-          // removed the entire corpus: fail it by name (inside the scratch,
-          // so nothing commits) rather than commit an unreadable version
-          requireNonEmptyCells(spark, s"$scratch/cells", s"ivf index at $dir",
-            v)
-        },
-        () => writeMeta(spark, s"$scratch/meta", meta)))
-    }
-
-  /** Fail by name when a just-written cell-partitioned frame carries no
-    * cell directory (see the commit-time comment) — an fs listing, no
-    * job. Shared wording with [[SemanticIndexStore]]'s guard. */
-  private[ops] def requireNonEmptyCells(spark: SparkSession, cellsPath: String,
-                                        what: String, v: Long): Unit = {
-    val (fs, p) = VersionedState.fsPath(spark, cellsPath)
-    require(fs.listStatus(p).exists(_.getPath.getName.startsWith("cell=")),
-      s"$what: committing v=$v would write an EMPTY index (tombstones " +
-        "removed every remaining row) — an empty standing index has " +
-        "nothing to probe and its cell frame cannot round-trip; delete " +
-        "the directory and re-init when the next corpus lands")
-  }
-
-  /** The version chain serving `v` ([[VersionedState.chain]]): `v` and
-    * the deltas below it down to the nearest FULL version, newest
-    * first. A cut chain fails by name rather than answering from a
-    * partial corpus. */
-  private def chain(spark: SparkSession, dir: String, v: Long): Seq[Long] =
-    VersionedState.chain(spark, dir, v, Subframes, "ivf index")(
-      readMeta(spark, dir, _).full)
-
   /** Train on the standing corpus and write v=0 as a FULL frame.
     * Refuses a directory already holding a committed version, and an
     * empty/all-null corpus (no centroids to stand on). Returns 0. */
   def init(corpus: DataFrame, dir: String, idCol: String, vecCol: String,
            nlist: Int = 16, lloydIters: Int = 2): Long = {
     val spark = corpus.sparkSession
-    VersionedState.requireUninitialized(spark, dir, Subframes, "ivf index")
+    requireUninitialized(spark, dir)
     val (centroids, cells) = Similarity.ivfBuild(corpus, idCol, vecCol,
       nlist, lloydIters)
-    require(centroids.nonEmpty,
-      s"ivf index at $dir: the corpus trained no centroids (empty or " +
-        "all-null vectors) — an empty standing index has nothing to probe")
-    // the train-time drift reference: assign-distance quantiles of the
-    // corpus the centroids were trained on, recomputed through the same
-    // kernel every later driftReport batch goes through
-    val (p50, p99) = Similarity.assignDistQuantiles(
-      Similarity.assignDistances(cells, "cv", centroids),
-      s"ivf index at $dir: init")
-    commitVersion(spark, dir, 0L, centroids, cells,
+    val (p50, p99) = trainQuantiles(dir, cells, "cv", centroids)
+    commitCells(spark, dir, 0L, centroids, cells,
       IvfMeta(centroids.head._2.length, centroids.length, p50, p99,
-        full = true))
+        full = true), full = true)
     0L
   }
 
-  /** Assign a new vector batch against the STANDING centroids (one
-    * narrow map) and write `expectedBase + 1` holding ONLY those rows
-    * — O(batch) write I/O; readers union the delta chain. The base
-    * must be the latest committed version. Ids must be unique across
-    * the merged corpora. Returns the version written. */
-  def append(spark: SparkSession, dir: String, batch: DataFrame,
-             idCol: String, vecCol: String, expectedBase: Long): Long = {
-    VersionedState.requireBase(spark, dir, expectedBase, Subframes,
-      "ivf index")
-    val meta = readMeta(spark, dir, expectedBase)
-    val centroids = readCentroids(spark, dir, expectedBase, meta)
-    // a re-dimensioned batch fails by name here: the assignment kernel
-    // would otherwise commit it with first-cell assignments whose
-    // cosines all score null — rows probes silently never return
-    val batchRows = Similarity.requireVecDim(batch, vecCol, meta.dim,
-      s"ivf index at $dir: append")
-    // an empty delta is a no-op, not a chain link: beyond chain
-    // hygiene, an empty cell-partitioned write would commit a
-    // FILE-LESS frame every later chain read fails to schema-infer
-    if (batchRows == 0L) expectedBase
-    else {
-      // the train-time quantiles copy forward unchanged: the centroids
-      // stand, so the drift reference must too
-      commitVersion(spark, dir, expectedBase + 1, centroids,
-        Similarity.ivfAssign(batch, idCol, vecCol, centroids),
-        meta.copy(full = false))
-      expectedBase + 1
-    }
-  }
-
-  /** Targeted REMOVAL from the standing index — the
-    * [[MinhashIndexStore.remove]] verb for the vector store: writes
-    * version `expectedBase + 1` as a TOMBSTONE DELTA (an empty cell
-    * payload plus the withdrawn ids in the version's
-    * [[VersionedState.TombsSubframe]] frame) — O(tombstones) write I/O,
-    * never a corpus touch. This store's cell frame is one row per
-    * document, so the effect is exact by construction: [[read]] and
-    * [[probeLatest]] anti-join the chain's live tombstones out of the
-    * cell rows (broadcast, on the already-cell-pruned scan — a removed
-    * document can neither score nor occupy a top-k slot), and the next
-    * [[compact]] materializes the filtered frame as the new full
-    * version, clearing the debt. Tombstone semantics (chain-scoped,
-    * union across links, re-ingest-after-compact-only, unknown ids a
-    * no-op) and the crash/replay/base rules follow
-    * [[MinhashIndexStore.remove]] verbatim. An empty removal frame is
-    * a no-op returning the base. Returns the version written. */
-  def remove(spark: SparkSession, dir: String, removeIds: DataFrame,
-             idCol: String, expectedBase: Long): Long = {
-    VersionedState.requireBase(spark, dir, expectedBase, Subframes,
-      "ivf index")
-    val meta = readMeta(spark, dir, expectedBase)
-    val centroids = readCentroids(spark, dir, expectedBase, meta)
-    val tombs = VersionedState.normalizeTombs(removeIds, idCol,
-      s"ivf index at $dir: remove")
-    if (tombs.isEmpty) expectedBase
-    else {
-      VersionedState.commitVersion(spark, dir, expectedBase + 1,
-        "ivf index", Subframes) { scratch =>
-        // four tiny independent payloads, overlapped
-        // ([[VersionedState.writeConcurrently]]) — a tombstone delta is
-        // all fixed cost, four one-file writes
-        VersionedState.writeConcurrently(Seq(
-          () => Similarity.ivfCentroidsDf(spark, centroids)
-            .coalesce(1).write.mode("overwrite").parquet(s"$scratch/centroids"),
-          // the cells payload is EMPTY but must stay readable by the
-          // unioning chain readers, so it is written PLAIN (one
-          // schema-bearing empty file; `cell` rides as an ordinary long
-          // data column) — a cell-PARTITIONED empty write would leave a
-          // file-less directory every later read fails to schema-infer
-          () => VersionedState.readCellChain(spark, dir,
-              Seq(chain(spark, dir, expectedBase).last), None)
-            .where(org.apache.spark.sql.functions.lit(false))
-            .write.mode("overwrite").parquet(s"$scratch/cells"),
-          () => writeMeta(spark, s"$scratch/meta", meta.copy(full = false)),
-          () => tombs.coalesce(1).write.mode("overwrite")
-            .parquet(s"$scratch/${VersionedState.TombsSubframe}")))
-      }
-      expectedBase + 1
-    }
-  }
-
-  /** The live (not-yet-compacted) tombstoned ids of a version's serving
-    * chain — one `tomb_id` column, empty-but-schema'd when the chain
-    * carries no removals. Read surface for audits and the specs. */
-  def liveTombs(spark: SparkSession, dir: String,
-                version: Option[Long] = None): DataFrame =
-    VersionedState.readLiveTombs(spark, dir,
-      chain(spark, dir, VersionedState.resolveVersion(spark, dir, Subframes,
-        "ivf index", version)))
+  /** One narrow argmin map per row — the path the
+    * [[Similarity.ivfBuild]] Scaladoc promises. */
+  protected def assign(batch: DataFrame, idCol: String, vecCol: String,
+                       centroids: Seq[(Long, Seq[Double])],
+                       meta: IvfMeta): DataFrame =
+    Similarity.ivfAssign(batch, idCol, vecCol, centroids)
 
   /** Anti-join a chain's live tombstones out of its cell rows — the
     * removal filter both read paths share: broadcast on the tombstone
     * side, applied to the (already cell-pruned) scan, with an fs-only
     * existence check first so the no-removals common case pays
-    * nothing. */
+    * nothing. This store's cells are one row per document, so the
+    * filter is exact. */
   private def minusTombs(spark: SparkSession, dir: String, links: Seq[Long],
                          cells: DataFrame): DataFrame =
-    if (!VersionedState.hasLiveTombs(spark, dir, links)) cells
+    if (!hasLiveTombs(spark, dir, links)) cells
     else cells.join(
-      broadcast(VersionedState.readLiveTombs(spark, dir, links)),
+      broadcast(readLiveTombs(spark, dir, links)),
       col("corpus_id") === col("tomb_id"), "left_anti")
 
-  /** Fold the head's delta chain into a new FULL version at head+1 —
-    * the O(corpus) job that makes pruning (and chain-length hygiene) a
-    * scheduled policy instead of a per-append tax — and where live
-    * TOMBSTONES ([[remove]]) are applied and cleared: [[read]] already
-    * filters them out of the loaded cells, so the new full version
-    * materializes the corpus-minus-removed frame and carries no tombs
-    * frame. A compact whose tombstones removed the ENTIRE corpus fails
-    * by name at commit (the empty-cells guard) — an empty standing
-    * index is a delete-and-re-init, never a committed version. No-op
-    * (returns the head) when the head is already full. Cadence: this
-    * store shares [[SemanticIndexStore]]'s cell-pruned read shape,
-    * whose measured chain-read tax is ~11% of the base probe cost per
-    * link (SCALE.md "Chain-read economics") — compact at least
-    * fortnightly on daily appends. */
-  def compact(spark: SparkSession, dir: String): Long = {
-    val head = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"ivf index at $dir has no committed version to compact"))
+  /** The fold: [[read]] already filters live tombstones out of the
+    * loaded cells, so the new full version materializes the
+    * corpus-minus-removed frame and carries no tombs frame. A compact
+    * whose tombstones removed the ENTIRE corpus fails by name at commit
+    * (the empty-cells guard) — an empty standing index is a
+    * delete-and-re-init, never a committed version. Cadence: this store
+    * shares [[SemanticIndexStore]]'s cell-pruned read shape, whose
+    * measured chain-read tax is ~11% of the base probe cost per link
+    * (SCALE.md "Chain-read economics") — compact at least fortnightly
+    * on daily appends. */
+  protected def fold(spark: SparkSession, dir: String, head: Long,
+                     meta: IvfMeta): Unit = {
     val loaded = read(spark, dir, Some(head))
-    if (loaded.meta.full) head
-    else {
-      commitVersion(spark, dir, head + 1, loaded.centroids, loaded.cells,
-        loaded.meta.copy(full = true))
-      head + 1
-    }
-  }
-
-  /** Delete versions no longer needed to read any version ≥
-    * `keepFrom`: everything strictly below `keepFrom`'s chain BASE
-    * (the newest full version at or below it). Deltas make the naive
-    * "delete < keepFrom" unsafe — a surviving version's chain may dip
-    * below the floor — so the floor clamps to the chain base and can
-    * never orphan a link; space reclamation advances as scheduled
-    * [[compact]] runs introduce newer full versions. Never the head.
-    * Returns the pruned version numbers. */
-  def prune(spark: SparkSession, dir: String, keepFrom: Long): Seq[Long] =
-    VersionedState.pruneToChainBase(spark, dir, keepFrom, Subframes,
-      "ivf index")(readMeta(spark, dir, _).full)
-
-  /** Chain length of `version` (the latest committed one when None) —
-    * the compaction-cadence term (SCALE.md "Chain-read economics"; this
-    * store shares [[SemanticIndexStore]]'s cell-pruned read shape, so
-    * the chain tax is per-scan overhead — compact at ~9 links), by a
-    * META-ONLY walk: one tiny one-row parquet read per link, no cell
-    * data touched — cheap enough for a maintenance loop to poll on
-    * every append. */
-  def chainLength(spark: SparkSession, dir: String,
-                  version: Option[Long] = None): Int =
-    chain(spark, dir, VersionedState.resolveVersion(spark, dir, Subframes,
-      "ivf index", version)).length
-
-  /** The version's centroid table, tamper-checked against its
-    * persisted meta. */
-  private def readCentroids(spark: SparkSession, dir: String, v: Long,
-                            meta: IvfMeta): Seq[(Long, Seq[Double])] = {
-    val centroids = Similarity.ivfCentroidsFromDf(
-      VersionedState.cachedVersionFrame(spark, s"$dir/v=$v/centroids"))
-    require(centroids.nonEmpty && centroids.head._2.length == meta.dim,
-      s"ivf index at $dir v=$v: centroid table does not match its " +
-        s"persisted meta ($meta) — the version directory was tampered with")
-    centroids
+    commitCells(spark, dir, head + 1, loaded.centroids, loaded.cells,
+      meta, full = true)
   }
 
   /** Load a pinned version (or the latest committed): centroids, meta,
-    * and the UNION of its delta chain's cell frames
-    * ([[VersionedState.readCellChain]]) MINUS the chain's live
-    * tombstones — this store's cells are one row per document, so
+    * and the UNION of its delta chain's cell frames MINUS the chain's
+    * live tombstones — this store's cells are one row per document, so
     * unlike [[MinhashIndexStore.read]] the loaded frame can honor
     * removals exactly (which is also what lets [[compact]] apply them
     * by just materializing this read). A missing or uncommitted pin
     * fails by name. */
   def read(spark: SparkSession, dir: String,
            version: Option[Long] = None): LoadedIvfIndex = {
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "ivf index", version)
+    val v = resolve(spark, dir, version)
     val meta = readMeta(spark, dir, v)
     val links = chain(spark, dir, v)
     LoadedIvfIndex(v, readCentroids(spark, dir, v, meta),
@@ -357,54 +145,19 @@ object IvfIndexStore {
       meta)
   }
 
-  /** The centroid-staleness signal: profile a candidate batch's
-    * assign distances against the version's persisted TRAIN-TIME
-    * quantiles ([[Similarity.AssignDriftReport]]). Appends assign
-    * against standing centroids by design and retraining is an
-    * explicit rebuild — this report is the operator's TRIGGER for that
-    * rebuild: an in-distribution batch lands `fracBeyondTrainP99` near
-    * 0.01 (the p99's own mass); a drifted one several times that.
-    * O(batch) — one narrow argmin map, a broadcast join, one aggregate
-    * — cheap enough to run on every append batch. The rebuild-cadence
-    * rule is documented in SCALE.md ("Centroid drift"). Fails by name
-    * on a re-dimensioned or unscoreable batch. */
-  def driftReport(spark: SparkSession, dir: String, batch: DataFrame,
-                  vecCol: String,
-                  version: Option[Long] = None): Similarity.AssignDriftReport = {
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "ivf index", version)
-    val meta = readMeta(spark, dir, v)
-    val centroids = readCentroids(spark, dir, v, meta)
-    Similarity.requireVecDim(batch, vecCol, meta.dim,
-      s"ivf index at $dir: drift report")
-    Similarity.assignDriftReport(batch, vecCol, centroids,
-      meta.assignP50, meta.assignP99, s"ivf index at $dir: drift report")
-  }
-
   /** Score queries against the latest committed version (or a pinned
     * one): cosine top-k, each query touching only its `nprobe` nearest
     * standing cells — in every chain link. The version, meta, and
-    * chain resolve ONCE; the only cell frame built is the pruned one
-    * the probe actually scans. */
+    * chain resolve ONCE; the touched-cell set (≤ nlist ids) becomes a
+    * static partition filter, so the scan reads nprobe/nlist of the
+    * corpus bytes. Live tombstones anti-join out of those pruned rows
+    * BEFORE scoring — a removed document must not occupy a top-k
+    * slot. */
   def probeLatest(spark: SparkSession, dir: String, queries: DataFrame,
                   idCol: String, vecCol: String, k: Int, nprobe: Int = 8,
                   version: Option[Long] = None): DataFrame = {
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "ivf index", version)
-    val meta = readMeta(spark, dir, v)
-    val centroids = readCentroids(spark, dir, v, meta)
-    // a re-dimensioned query batch would assign to the first cells and
-    // score null everywhere — zero results with zero errors — so it
-    // fails by name instead
-    Similarity.requireVecDim(queries, vecCol, meta.dim,
-      s"ivf index at $dir: probe")
-    // the probe's touched-cell set (≤ nlist ids, model-sized driver
-    // state) becomes a static partition filter: the scan reads
-    // nprobe/nlist of the corpus bytes, not all of them. Live
-    // tombstones anti-join out of those pruned rows BEFORE scoring —
-    // a removed document must not occupy a top-k slot
-    val links = chain(spark, dir, v)
-    val touched = Similarity.ivfProbeCells(queries, vecCol, centroids, nprobe)
+    val (_, centroids, links, touched) =
+      probeTarget(spark, dir, queries, vecCol, nprobe, version)
     Similarity.ivfProbe(centroids,
       minusTombs(spark, dir, links,
         VersionedState.readCellChain(spark, dir, links, Some(touched))),

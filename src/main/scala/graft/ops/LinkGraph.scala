@@ -84,12 +84,12 @@ object LinkGraph {
               iters: Int, scratchDir: String,
               damping: Double = 0.85): DataFrame =
     // roundsPerWrite = 4: each parquet round-trip costs ~0.4–0.6 s of
-    // pure fixed cost at gate scale (write job + commit + footer read —
-    // GateProfile, r20) against rank vectors that are node-mass small;
-    // nesting 4 rounds per trip keeps the plan at the unrolled gate
-    // form's proven depth while quartering the trips. Bit-identical for
-    // any k ([[Graph.pageRankCheckpointed]]); a crash re-computes at
-    // most 3 rounds.
+    // pure fixed cost at gate scale (write job + commit + footer read,
+    // `perfbench/run.py --trace 1`) against rank vectors that are
+    // node-mass small; nesting 4 rounds per trip keeps the plan at the
+    // unrolled gate form's proven depth while quartering the trips.
+    // Bit-identical for any k ([[Graph.pageRankCheckpointed]]); a crash
+    // re-computes at most 3 rounds.
     // edgesDistinct: [[termEdges]] is distinct by construction — the
     // incidence is distinct per (doc, token), fwd/rev are one-to-one
     // maps of it, and the two directions live in disjoint `d:`/`t:` key

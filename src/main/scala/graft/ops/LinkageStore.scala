@@ -62,42 +62,23 @@ import org.apache.spark.sql.functions._
   * pairs equal the content-determined ones it had, and duplicate edge
   * rows cannot change a connected component).
   */
-object LinkageStore {
+object LinkageStore extends VersionedStore("linkage store",
+    Seq("labels", "edges", "meta"), Seq("value_col", "block_cols", "max_dist")) {
 
   /** The comparison parameters a chain was built with. */
   final case class LinkMeta(valueCol: String, blockCols: Seq[String],
                             maxDist: Int)
 
-  private val Subframes = Seq("labels", "edges", "meta")
-  private val MetaCols = Seq("value_col", "block_cols", "max_dist", "full")
+  type Meta = LinkMeta
+
+  protected def encodeMeta(m: LinkMeta): Seq[Any] =
+    Seq[Any](m.valueCol, m.blockCols.mkString(","), m.maxDist)
+
+  protected def decodeMeta(s: Seq[Any], full: Boolean): LinkMeta =
+    LinkMeta(s(0).asInstanceOf[String],
+      s(1).asInstanceOf[String].split(",").toSeq, s(2).asInstanceOf[Int])
+
   private val Sep = "\u0001"
-
-  def latestVersion(spark: SparkSession, dir: String): Option[Long] =
-    VersionedState.latestVersion(spark, dir, Subframes)
-
-  private def writeMeta(spark: SparkSession, dest: String, meta: LinkMeta,
-                        full: Boolean): Unit = {
-    import spark.implicits._
-    Seq((meta.valueCol, meta.blockCols.mkString(","), meta.maxDist, full))
-      .toDF(MetaCols: _*)
-      .coalesce(1).write.mode("overwrite").parquet(dest)
-  }
-
-  private def readMetaRow(spark: SparkSession, dir: String,
-                          v: Long): (LinkMeta, Boolean) = {
-    // memoized ([[VersionedState.cachedMetaRow]]): chain walks and the
-    // verbs re-read this one immutable row constantly — each re-read
-    // was a parquet footer decode plus a one-row Spark job
-    val s = VersionedState.cachedMetaRow(spark, dir, v, MetaCols,
-      s"linkage store at $dir v=$v")
-    (LinkMeta(s(0).asInstanceOf[String],
-      s(1).asInstanceOf[String].split(",").toSeq, s(2).asInstanceOf[Int]),
-      s(3).asInstanceOf[Boolean])
-  }
-
-  private def chain(spark: SparkSession, dir: String, v: Long): Seq[Long] =
-    VersionedState.chain(spark, dir, v, Subframes, "linkage store")(
-      readMetaRow(spark, dir, _)._2)
 
   /** Keep-latest-by-version over the chain's label rows, tombstones
     * still present (callers filter `live`) — `(block…, value, label,
@@ -128,8 +109,7 @@ object LinkageStore {
   private def commitVersion(spark: SparkSession, dir: String, v: Long,
                             labels: DataFrame, edges: DataFrame,
                             meta: LinkMeta, full: Boolean): Unit =
-    VersionedState.commitVersion(spark, dir, v, "linkage store",
-      Subframes) { scratch =>
+    commit(spark, dir, v) { scratch =>
       // three independent payloads (disjoint paths, nothing reads
       // another's output) — overlapped so their fixed job costs don't
       // serialize ([[VersionedState.writeConcurrently]]); shared cached
@@ -179,8 +159,7 @@ object LinkageStore {
     require(blockCols.forall(!_.contains(",")),
       s"block column names must not contain ',' (the persisted " +
         s"block_cols separator): ${blockCols.mkString("; ")}")
-    VersionedState.requireUninitialized(spark, dir, Subframes,
-      "linkage store")
+    requireUninitialized(spark, dir)
     val meta = LinkMeta(valueCol, blockCols, maxDist)
     requireCols(df, meta, dir, "init")
     val values = OpCaches.registered(distinctValues(df, meta))
@@ -209,15 +188,14 @@ object LinkageStore {
     * are skipped entirely (re-sending a batch is a content-level
     * no-op); a batch with NO new values returns the base without
     * growing the chain. The base must be the latest committed version
-    * ([[VersionedState.requireBase]] — crash replay follows the store
+    * ([[requireBase]] — crash replay follows the store
     * doctrine: a replayed append either no-ops on its own committed
     * content or fails the base check loudly). Returns the version
     * serving the result. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
              expectedBase: Long): Long = {
-    VersionedState.requireBase(spark, dir, expectedBase, Subframes,
-      "linkage store")
-    val (meta, _) = readMetaRow(spark, dir, expectedBase)
+    requireBase(spark, dir, expectedBase)
+    val meta = readMeta(spark, dir, expectedBase)
     requireCols(batch, meta, dir, "batch")
     val links = chain(spark, dir, expectedBase)
     val standing = OpCaches.registered(
@@ -298,9 +276,8 @@ object LinkageStore {
     * serving the result. */
   def remove(spark: SparkSession, dir: String, removeValues: DataFrame,
              expectedBase: Long): Long = {
-    VersionedState.requireBase(spark, dir, expectedBase, Subframes,
-      "linkage store")
-    val (meta, _) = readMetaRow(spark, dir, expectedBase)
+    requireBase(spark, dir, expectedBase)
+    val meta = readMeta(spark, dir, expectedBase)
     requireCols(removeValues, meta, dir, "removal")
     val links = chain(spark, dir, expectedBase)
     val standing = OpCaches.registered(
@@ -354,9 +331,8 @@ object LinkageStore {
     * assign each distinct value. */
   def labels(spark: SparkSession, dir: String,
              version: Option[Long] = None): DataFrame = {
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "linkage store", version)
-    val meta = readMetaRow(spark, dir, v)._1
+    val v = resolve(spark, dir, version)
+    val meta = readMeta(spark, dir, v)
     labelState(spark, dir, chain(spark, dir, v), meta)
       .where(col("live")).drop("live")
   }
@@ -369,9 +345,8 @@ object LinkageStore {
     * label state. */
   def resolveRows(spark: SparkSession, dir: String, df: DataFrame,
                   version: Option[Long] = None): DataFrame = {
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "linkage store", version)
-    val meta = readMetaRow(spark, dir, v)._1
+    val v = resolve(spark, dir, version)
+    val meta = readMeta(spark, dir, v)
     requireCols(df, meta, dir, "resolve")
     val lbl = labels(spark, dir, Some(v))
       .select((meta.blockCols :+ meta.valueCol).map(col) :+
@@ -383,18 +358,13 @@ object LinkageStore {
       .drop("_lbl")
   }
 
-  /** Fold the chain into one FULL version: keep-latest live labels,
-    * the distinct live-endpoint pair set, tombstone debt dropped (a
-    * full version starts the chain, so the markers have nothing left
-    * to override). O(state) — the scheduled consolidation, after which
-    * [[prune]] reclaims the folded links. No-op returning the head
-    * when it is already full. */
-  def compact(spark: SparkSession, dir: String): Long = {
-    val head = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"linkage store at $dir has no committed version — init first"))
-    val (meta, full) = readMetaRow(spark, dir, head)
-    if (full) return head
+  /** The fold: keep-latest live labels, the distinct live-endpoint
+    * pair set, tombstone debt dropped (a full version starts the chain,
+    * so the markers have nothing left to override). O(state) — the
+    * scheduled consolidation, after which [[prune]] reclaims the folded
+    * links. */
+  protected def fold(spark: SparkSession, dir: String, head: Long,
+                     meta: LinkMeta): Unit = {
     val links = chain(spark, dir, head)
     val live = OpCaches.registered(
       labelState(spark, dir, links, meta).where(col("live")))
@@ -406,19 +376,6 @@ object LinkageStore {
       .join(la, meta.blockCols :+ "value_a", "left_semi")
       .join(lb, meta.blockCols :+ "value_b", "left_semi")
       .distinct()
-    val v = head + 1
-    commitVersion(spark, dir, v, live, liveEdges, meta, full = true)
-    v
+    commitVersion(spark, dir, head + 1, live, liveEdges, meta, full = true)
   }
-
-  /** Delete versions below `keepFrom`'s chain base
-    * ([[VersionedState.pruneToChainBase]]). */
-  def prune(spark: SparkSession, dir: String, keepFrom: Long): Seq[Long] =
-    VersionedState.pruneToChainBase(spark, dir, keepFrom, Subframes,
-      "linkage store")(readMetaRow(spark, dir, _)._2)
-
-  /** Links serving the latest version — the cadence trigger
-    * ([[MinhashIndexStore.chainLength]] contract). */
-  def chainLength(spark: SparkSession, dir: String): Int =
-    latestVersion(spark, dir).map(chain(spark, dir, _).size).getOrElse(0)
 }

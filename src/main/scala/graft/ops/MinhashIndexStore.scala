@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * maintainers racing each other all fail loudly instead of silently
   * dropping merged batches from every later snapshot. Commit atomicity,
   * crash replay, race detection, and pruning live in
-  * [[VersionedState]], shared with [[SemanticIndexStore]] and
-  * [[IvfIndexStore]].
+  * [[VersionedState]] and the [[VersionedStore]] lifecycle all four
+  * stores share.
   *
   * Versions are DELTAS, not snapshots — the O(batch) maintenance rule
   * ([[IvfIndexStore]]'s): [[init]] writes v=0 as a full frame;
@@ -88,7 +88,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[probeLatest]]), so no corpus-mass row ever crosses an exchange at
   * probe time; the O(corpus) set-keyed merge runs only at scheduled
   * compaction. */
-object MinhashIndexStore {
+object MinhashIndexStore extends IdKeyedStore("minhash index",
+    Seq("index", "bands", "meta"),
+    Seq("shingle_k", "num_bands", "rows_per_band", "max_group_size")) {
 
   /** The content parameters a version was built with — persisted as
     * the version's `meta` frame and required to match across every
@@ -102,6 +104,15 @@ object MinhashIndexStore {
   final case class IndexMeta(shingleK: Int, numBands: Int, rowsPerBand: Int,
                              maxGroupSize: Int)
 
+  type Meta = IndexMeta
+
+  protected def encodeMeta(m: IndexMeta): Seq[Any] =
+    Seq[Any](m.shingleK, m.numBands, m.rowsPerBand, m.maxGroupSize)
+
+  protected def decodeMeta(s: Seq[Any], full: Boolean): IndexMeta =
+    IndexMeta(s(0).asInstanceOf[Int], s(1).asInstanceOf[Int],
+      s(2).asInstanceOf[Int], s(3).asInstanceOf[Int])
+
   /** A committed version loaded for probing: the `(shh, ids, sig)`
     * index frame and its pre-aggregated bucket table — each the UNION
     * of the version's chain (its deltas down to the nearest full
@@ -109,47 +120,15 @@ object MinhashIndexStore {
   final case class LoadedIndex(version: Long, index: DataFrame,
                                bands: DataFrame, meta: IndexMeta)
 
-  private val Subframes = Seq("index", "bands", "meta")
-
-  /** Latest committed version (all three subframes carry `_SUCCESS`),
-    * or None before the first [[init]]. */
-  def latestVersion(spark: SparkSession, dir: String): Option[Long] =
-    VersionedState.latestVersion(spark, dir, Subframes)
-
-  private def writeMeta(spark: SparkSession, dest: String,
-                        meta: IndexMeta, full: Boolean): Unit = {
-    import spark.implicits._
-    // written with the SAME column list the readers require, so the
-    // write and the requireMetaCols valve can never drift apart
-    Seq((meta.shingleK, meta.numBands, meta.rowsPerBand, meta.maxGroupSize, full))
-      .toDF(MetaCols: _*)
-      .coalesce(1).write.mode("overwrite").parquet(dest)
-  }
-
-  private val MetaCols =
-    Seq("shingle_k", "num_bands", "rows_per_band", "max_group_size", "full")
-
-  private def readMetaRow(spark: SparkSession, dir: String,
-                          v: Long): (IndexMeta, Boolean) = {
-    // memoized ([[VersionedState.cachedMetaRow]]): chain walks and the
-    // verbs re-read this one immutable row constantly — each re-read
-    // was a parquet footer decode plus a one-row Spark job
-    val s = VersionedState.cachedMetaRow(spark, dir, v, MetaCols,
-      s"minhash index at $dir v=$v")
-    (IndexMeta(s(0).asInstanceOf[Int], s(1).asInstanceOf[Int],
-      s(2).asInstanceOf[Int], s(3).asInstanceOf[Int]),
-      s(4).asInstanceOf[Boolean])
-  }
-
-  private def readMeta(spark: SparkSession, dir: String, v: Long): IndexMeta =
-    readMetaRow(spark, dir, v)._1
+  private def linkFrames(spark: SparkSession, dir: String, links: Seq[Long],
+                         sub: String): Seq[DataFrame] =
+    links.map(w => VersionedState.cachedVersionFrame(spark, s"$dir/v=$w/$sub"))
 
   private[graft] def commitVersion(index: DataFrame, dir: String, v: Long,
                                    meta: IndexMeta, full: Boolean,
                                    tombs: Option[DataFrame] = None): Unit = {
     val spark = index.sparkSession
-    VersionedState.commitVersion(spark, dir, v, "minhash index",
-      Subframes) { scratch =>
+    commit(spark, dir, v) { scratch =>
       // index→bands stays sequential INSIDE its task (the bucket table
       // derives from EXACTLY the bytes just written — re-read, not the
       // in-memory frame — so a version's bands can never drift from its
@@ -165,20 +144,11 @@ object MinhashIndexStore {
             .write.mode("overwrite").parquet(s"$scratch/bands")
         },
         () => writeMeta(spark, s"$scratch/meta", meta, full)) ++
-        // the optional removal payload ([[VersionedState.TombsSubframe]])
-        // rides the same atomic rename as the required subframes
-        tombs.map(t => () => t.coalesce(1).write.mode("overwrite")
-          .parquet(s"$scratch/${VersionedState.TombsSubframe}"): Unit))
+        // the optional removal payload rides the same atomic rename as
+        // the required subframes
+        tombs.map(t => () => writeTombs(t, scratch)))
     }
   }
-
-  /** The version chain serving `v` ([[VersionedState.chain]]): `v` and
-    * the deltas below it down to the nearest FULL version, newest
-    * first. A cut chain fails by name rather than probing a partial
-    * corpus, which would silently miss near-dup pairs. */
-  private def chain(spark: SparkSession, dir: String, v: Long): Seq[Long] =
-    VersionedState.chain(spark, dir, v, Subframes, "minhash index")(
-      readMetaRow(spark, dir, _)._2)
 
   /** Build the index over the standing corpus
     * ([[Dedup.minhashIndexBuild]]) and write it as the initial version
@@ -199,8 +169,7 @@ object MinhashIndexStore {
            numBands: Int = Dedup.DefaultNumBands,
            rowsPerBand: Int = Dedup.DefaultRowsPerBand,
            maxGroupSize: Int = Dedup.DefaultMaxGroupSize): Long = {
-    val spark = docs.sparkSession
-    VersionedState.requireUninitialized(spark, dir, Subframes, "minhash index")
+    requireUninitialized(docs.sparkSession, dir)
     commitVersion(
       Dedup.minhashIndexBuild(docs, idCol, textCol, shingleK, numBands,
         rowsPerBand, maxGroupSize),
@@ -223,8 +192,7 @@ object MinhashIndexStore {
     * grow the chain. Returns the version written. */
   def append(spark: SparkSession, dir: String, batch: DataFrame,
              idCol: String, textCol: String, expectedBase: Long): Long = {
-    VersionedState.requireBase(spark, dir, expectedBase, Subframes,
-      "minhash index")
+    requireBase(spark, dir, expectedBase)
     val meta = readMeta(spark, dir, expectedBase)
     val delta = Dedup.minhashIndexBuild(batch, idCol, textCol, meta.shingleK,
       meta.numBands, meta.rowsPerBand, meta.maxGroupSize)
@@ -281,11 +249,9 @@ object MinhashIndexStore {
     * base. Returns the version written. */
   def remove(spark: SparkSession, dir: String, removeIds: DataFrame,
              idCol: String, expectedBase: Long): Long = {
-    VersionedState.requireBase(spark, dir, expectedBase, Subframes,
-      "minhash index")
+    requireBase(spark, dir, expectedBase)
     val meta = readMeta(spark, dir, expectedBase)
-    val tombs = VersionedState.normalizeTombs(removeIds, idCol,
-      s"minhash index at $dir: remove")
+    val tombs = normalizeTombs(dir, removeIds, idCol)
     if (tombs.isEmpty) expectedBase
     else {
       // empty-but-schema'd payload frames: a remove version is pure
@@ -300,92 +266,47 @@ object MinhashIndexStore {
     }
   }
 
-  /** The live (not-yet-compacted) tombstoned ids of a version's serving
-    * chain — one `tomb_id` column, empty-but-schema'd when the chain
-    * carries no removals. Read surface for audits and the specs. */
-  def liveTombs(spark: SparkSession, dir: String,
-                version: Option[Long] = None): DataFrame =
-    VersionedState.readLiveTombs(spark, dir,
-      chain(spark, dir, VersionedState.resolveVersion(spark, dir, Subframes,
-        "minhash index", version)))
-
-  /** Fold the head's delta chain into a new FULL version at head+1 —
-    * the O(corpus) [[Dedup.minhashIndexAppend]] set-keyed merge as a
-    * scheduled job instead of a per-append tax. This is also where the
-    * `maxGroupSize` valves fire on the MERGED mass: a group or bucket
-    * that outgrew the valve across links fails the compact by name,
-    * never a probe ([[chainHealth]] surfaces the pressure first) — and
-    * where live TOMBSTONES are applied and cleared: removed ids leave
-    * the merged member lists (one extra explode/anti-join/regroup pass
-    * over the merge's own corpus mass, broadcast on the tombstone
+  /** The fold: the O(corpus) [[Dedup.minhashIndexAppend]] set-keyed
+    * merge as a scheduled job instead of a per-append tax. This is also
+    * where the `maxGroupSize` valves fire on the MERGED mass: a group or
+    * bucket that outgrew the valve across links fails the compact by
+    * name, never a probe ([[chainHealth]] surfaces the pressure first) —
+    * and where live TOMBSTONES are applied and cleared: removed ids
+    * leave the merged member lists (one extra explode/anti-join/regroup
+    * pass over the merge's own corpus mass, broadcast on the tombstone
     * side), a fully-removed group vanishes, and the new full version
     * carries no tombs frame — removal debt never outlives a compact.
-    * No-op (returns the head) when the head is already full. Cadence:
-    * the measured chain-read tax is ~25% of the base probe cost PER
-    * LINK for this store's full-narrow-scan shape (SCALE.md
+    * Cadence: the measured chain-read tax is ~25% of the base probe cost
+    * PER LINK for this store's full-narrow-scan shape (SCALE.md
     * "Chain-read economics") — compact weekly on daily appends
     * (≤ 8 links). */
-  def compact(spark: SparkSession, dir: String): Long = {
+  protected def fold(spark: SparkSession, dir: String, head: Long,
+                     meta: IndexMeta): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col, collect_list,
       explode, first, sort_array}
-    val head = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"minhash index at $dir has no committed version to compact"))
-    val (meta, full) = readMetaRow(spark, dir, head)
-    if (full) head
-    else {
-      val links = chain(spark, dir, head)
-      val frames = links.map(w => VersionedState.cachedVersionFrame(spark, s"$dir/v=$w/index"))
-      val merged = Dedup.minhashIndexAppend(frames.head,
-        frames.tail.reduce(_ unionByName _), meta.maxGroupSize)
-      val applied =
-        if (!VersionedState.hasLiveTombs(spark, dir, links)) merged
-        else {
-          // regrouping by shh preserves the merge's invariants: the
-          // surviving ids re-sort (gid = new minimum member), sig is a
-          // pure function of shh (either row's copy is THE value), and
-          // a group whose every member was removed emits no exploded
-          // survivor — the group row vanishes, bands re-derive from the
-          // filtered frame at commit
-          merged.select(col("shh"), col("sig"), explode(col("ids")).as("id"))
-            .join(broadcast(VersionedState.readLiveTombs(spark, dir, links)),
-              col("id") === col("tomb_id"), "left_anti")
-            .groupBy("shh").agg(
-              sort_array(collect_list(col("id"))).as("ids"),
-              first(col("sig")).as("sig"))
-            .select("shh", "ids", "sig")
-        }
-      commitVersion(applied, dir, head + 1, meta, full = true)
-      head + 1
-    }
+    val links = chain(spark, dir, head)
+    val frames = linkFrames(spark, dir, links, "index")
+    val merged = Dedup.minhashIndexAppend(frames.head,
+      frames.tail.reduce(_ unionByName _), meta.maxGroupSize)
+    val applied =
+      if (!hasLiveTombs(spark, dir, links)) merged
+      else {
+        // regrouping by shh preserves the merge's invariants: the
+        // surviving ids re-sort (gid = new minimum member), sig is a
+        // pure function of shh (either row's copy is THE value), and
+        // a group whose every member was removed emits no exploded
+        // survivor — the group row vanishes, bands re-derive from the
+        // filtered frame at commit
+        merged.select(col("shh"), col("sig"), explode(col("ids")).as("id"))
+          .join(broadcast(readLiveTombs(spark, dir, links)),
+            col("id") === col("tomb_id"), "left_anti")
+          .groupBy("shh").agg(
+            sort_array(collect_list(col("id"))).as("ids"),
+            first(col("sig")).as("sig"))
+          .select("shh", "ids", "sig")
+      }
+    commitVersion(applied, dir, head + 1, meta, full = true)
   }
-
-  /** Delete versions no longer needed to read any version ≥
-    * `keepFrom`: everything strictly below `keepFrom`'s chain BASE
-    * (the newest full version at or below it), plus crash debris below
-    * that floor. Deltas make the naive "delete < keepFrom" unsafe — a
-    * surviving version's chain may dip below the floor — so the floor
-    * clamps to the chain base and can never orphan a link; space
-    * reclamation advances as scheduled [[compact]] runs introduce newer
-    * full versions. Never prunes the latest committed version; the
-    * retention window — retain ≥ the max expected reader/appender
-    * runtime — is the caller's policy. Returns the pruned versions. */
-  def prune(spark: SparkSession, dir: String, keepFrom: Long): Seq[Long] =
-    VersionedState.pruneToChainBase(spark, dir, keepFrom, Subframes,
-      "minhash index")(readMetaRow(spark, dir, _)._2)
-
-  /** Chain length of `version` (the latest committed one when None) —
-    * the compaction-cadence term (SCALE.md "Chain-read economics":
-    * compact this store's chain at ≤ 8 links), by a META-ONLY walk:
-    * one tiny one-row parquet read per link, no index or bands data
-    * touched — cheap enough for a maintenance loop to poll on every
-    * append. [[chainHealth]] additionally aggregates the chain's data
-    * frames to report merged masses; poll THIS for the cadence and run
-    * the health check when the cadence trips. */
-  def chainLength(spark: SparkSession, dir: String,
-                  version: Option[Long] = None): Int =
-    chain(spark, dir, VersionedState.resolveVersion(spark, dir, Subframes,
-      "minhash index", version)).length
 
   /** What [[chainHealth]] reports: the merged-mass view of a version's
     * delta chain against the persisted `maxGroupSize` valve, BEFORE a
@@ -401,9 +322,7 @@ object MinhashIndexStore {
     * removals can only over-warn, never under-warn. */
   final case class ChainHealth(version: Long, chainLength: Int,
                                maxGroupSize: Int, maxMergedGroup: Long,
-                               maxMergedBucketBound: Long) {
-    /** The merged member-list valve WILL fire at the next compact. */
-    def groupValveExceeded: Boolean = maxMergedGroup > maxGroupSize
+                               maxMergedBucketBound: Long) extends GroupValveHealth {
     /** The merged bucket valve MAY fire at the next compact (bound). */
     def bucketValveAtRisk: Boolean = maxMergedBucketBound > maxGroupSize
   }
@@ -425,12 +344,11 @@ object MinhashIndexStore {
   def chainHealth(spark: SparkSession, dir: String,
                   version: Option[Long] = None): ChainHealth = {
     import org.apache.spark.sql.functions.{col, max, size, sum}
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "minhash index", version)
+    val v = resolve(spark, dir, version)
     val links = chain(spark, dir, v)
     val meta = readMeta(spark, dir, v)
     def maxMerged(sub: String, keys: Seq[String], listCol: String): Long = {
-      val merged = links.map(w => VersionedState.cachedVersionFrame(spark, s"$dir/v=$w/$sub"))
+      val merged = linkFrames(spark, dir, links, sub)
         .reduce(_ unionByName _)
         .groupBy(keys.head, keys.tail: _*)
         .agg(sum(size(col(listCol))).as("m"))
@@ -455,17 +373,14 @@ object MinhashIndexStore {
     * frames must anti-join [[liveTombs]] itself. */
   def read(spark: SparkSession, dir: String,
            version: Option[Long] = None): LoadedIndex = {
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "minhash index", version)
+    val v = resolve(spark, dir, version)
     val links = chain(spark, dir, v)
     // chain link frames are memoized per version directory
     // ([[VersionedState.cachedVersionFrame]]) — immutable by protocol,
     // so the per-probe listing + footer inference was pure fixed cost
     LoadedIndex(v,
-      links.map(w => VersionedState.cachedVersionFrame(spark, s"$dir/v=$w/index"))
-        .reduce(_ unionByName _),
-      links.map(w => VersionedState.cachedVersionFrame(spark, s"$dir/v=$w/bands"))
-        .reduce(_ unionByName _),
+      linkFrames(spark, dir, links, "index").reduce(_ unionByName _),
+      linkFrames(spark, dir, links, "bands").reduce(_ unionByName _),
       readMeta(spark, dir, v))
   }
 
@@ -482,36 +397,24 @@ object MinhashIndexStore {
     * silently desynchronize the persisted bands table's gids and drop
     * candidates. The output filter is provably equivalent to probing a
     * fresh build over corpus-minus-removed (the [[remove]] Scaladoc's
-    * purity argument) and costs two broadcast anti-joins on
-    * candidate-mass rows — with an fs-only existence check first, so
-    * the no-removals common case pays nothing. */
+    * purity argument). */
   def probeLatest(spark: SparkSession, dir: String, batch: DataFrame,
                   idCol: String, textCol: String,
                   threshold: Double = 0.5,
                   prefilterMargin: Double = 0.25,
                   minPairBands: Int = 1,
                   version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "minhash index", version)
+    val v = resolve(spark, dir, version)
     val links = chain(spark, dir, v)
     val loaded = read(spark, dir, Some(v))
     // the batch shingles with the PERSISTED shingleK — like the banding
     // parameters, it is index state, not a per-probe choice: a probe
     // shingled differently would produce disjoint set hashes and find
     // nothing, silently
-    val pairs = Dedup.minhashIndexDedupBatchBanded(loaded.index,
-      loaded.bands, batch, idCol, textCol, loaded.meta.shingleK,
-      loaded.meta.numBands, loaded.meta.rowsPerBand, threshold,
-      prefilterMargin, minPairBands, loaded.meta.maxGroupSize)
-    if (!VersionedState.hasLiveTombs(spark, dir, links)) pairs
-    else {
-      val tombs = VersionedState.readLiveTombs(spark, dir, links)
-      pairs
-        .join(broadcast(tombs.select(col("tomb_id").as("_ta"))),
-          col("id_a") === col("_ta"), "left_anti")
-        .join(broadcast(tombs.select(col("tomb_id").as("_tb"))),
-          col("id_b") === col("_tb"), "left_anti")
-    }
+    minusTombPairs(spark, dir, links,
+      Dedup.minhashIndexDedupBatchBanded(loaded.index,
+        loaded.bands, batch, idCol, textCol, loaded.meta.shingleK,
+        loaded.meta.numBands, loaded.meta.rowsPerBand, threshold,
+        prefilterMargin, minPairBands, loaded.meta.maxGroupSize))
   }
 }

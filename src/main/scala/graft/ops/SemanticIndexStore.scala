@@ -59,7 +59,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * partition-pruned to the batch's touched cells and never shuffle
   * (plan-pinned in `PlanQualitySpec`); the O(corpus) merge runs only
   * at scheduled compaction. */
-object SemanticIndexStore {
+object SemanticIndexStore extends CellIndexStore("semantic index",
+    Seq("dim", "nlist", "max_group_size", "assign_p50", "assign_p99")) {
 
   /** Persisted provenance of a version: embedding dimension, trained
     * cell count, and the identical-vector `maxGroupSize` valve the
@@ -76,7 +77,17 @@ object SemanticIndexStore {
     * unchanged because the centroids stand until an explicit
     * rebuild. */
   final case class SemMeta(dim: Int, nlist: Int, maxGroupSize: Int,
-                           assignP50: Double, assignP99: Double)
+                           assignP50: Double, assignP99: Double) extends CellMeta
+
+  type Meta = SemMeta
+
+  protected def encodeMeta(m: SemMeta): Seq[Any] =
+    Seq[Any](m.dim, m.nlist, m.maxGroupSize, m.assignP50, m.assignP99)
+
+  protected def decodeMeta(s: Seq[Any], full: Boolean): SemMeta =
+    SemMeta(s(0).asInstanceOf[Int], s(1).asInstanceOf[Int],
+      s(2).asInstanceOf[Int], s(3).asInstanceOf[Double],
+      s(4).asInstanceOf[Double])
 
   /** A committed version loaded for probing: `cells` is the UNION of
     * the version's chain (its deltas down to the nearest full
@@ -84,82 +95,6 @@ object SemanticIndexStore {
   final case class LoadedSemIndex(version: Long,
                                   centroids: Seq[(Long, Seq[Double])],
                                   cells: DataFrame, meta: SemMeta)
-
-  private val Subframes = Seq("centroids", "cells", "meta")
-
-  def latestVersion(spark: SparkSession, dir: String): Option[Long] =
-    VersionedState.latestVersion(spark, dir, Subframes)
-
-  private def writeMeta(spark: SparkSession, dest: String, meta: SemMeta,
-                        full: Boolean): Unit = {
-    import spark.implicits._
-    // written with the SAME column list the readers require, so the
-    // write and the requireMetaCols valve can never drift apart
-    Seq((meta.dim, meta.nlist, meta.maxGroupSize,
-        meta.assignP50, meta.assignP99, full))
-      .toDF(MetaCols: _*)
-      .coalesce(1).write.mode("overwrite").parquet(dest)
-  }
-
-  private val MetaCols =
-    Seq("dim", "nlist", "max_group_size", "assign_p50", "assign_p99", "full")
-
-  private def readMetaRow(spark: SparkSession, dir: String,
-                          v: Long): (SemMeta, Boolean) = {
-    // memoized ([[VersionedState.cachedMetaRow]]): chain walks and the
-    // verbs re-read this one immutable row constantly — each re-read
-    // was a parquet footer decode plus a one-row Spark job
-    val s = VersionedState.cachedMetaRow(spark, dir, v, MetaCols,
-      s"semantic index at $dir v=$v")
-    (SemMeta(s(0).asInstanceOf[Int], s(1).asInstanceOf[Int],
-      s(2).asInstanceOf[Int], s(3).asInstanceOf[Double],
-      s(4).asInstanceOf[Double]), s(5).asInstanceOf[Boolean])
-  }
-
-  private def commitVersion(spark: SparkSession, dir: String, v: Long,
-                            centroids: Seq[(Long, Seq[Double])],
-                            cells: DataFrame, meta: SemMeta,
-                            full: Boolean): Unit =
-    VersionedState.commitVersion(spark, dir, v, "semantic index",
-      Subframes) { scratch =>
-      // three independent payloads, overlapped
-      // ([[VersionedState.writeConcurrently]]): the cell write is the
-      // data job; the coalesce(1) centroid and meta writes are pure
-      // fixed cost that no longer serializes behind it
-      VersionedState.writeConcurrently(Seq(
-        () => Similarity.ivfCentroidsDf(spark, centroids)
-          .coalesce(1).write.mode("overwrite").parquet(s"$scratch/centroids"),
-        () => {
-          // cell-partitioned layout, each cell co-located into one writer
-          // task (the IvfIndexStore rationale: probe scans prune to the
-          // batch's touched cells; the repartition keeps file counts at
-          // one per cell instead of task_count × nlist). One shuffle per
-          // COMMIT (over delta mass for appends, corpus mass only at
-          // init/compaction), zero per probe. Null-vector groups carry the
-          // SMALLEST cell id, not a null cell (the NearestCells kernel's
-          // invalid-input branch) — harmless to answers because a null
-          // vector scores null cosine and is threshold-filtered, but it
-          // means no row ever lands in the hive default partition and
-          // cell-0 mass includes the corpus's null rows.
-          cells.repartition(org.apache.spark.sql.functions.col("cell"))
-            .write.partitionBy("cell").mode("overwrite").parquet(s"$scratch/cells")
-          // the IvfIndexStore guard: the only way to an empty cell frame
-          // here is a compact whose tombstones removed the entire corpus —
-          // fail by name inside the scratch rather than commit a file-less
-          // frame every later chain read fails to schema-infer
-          IvfIndexStore.requireNonEmptyCells(spark, s"$scratch/cells",
-            s"semantic index at $dir", v)
-        },
-        () => writeMeta(spark, s"$scratch/meta", meta, full)))
-    }
-
-  /** The version chain serving `v` ([[VersionedState.chain]]): `v` and
-    * the deltas below it down to the nearest FULL version, newest
-    * first. A cut chain fails by name rather than probing a partial
-    * corpus, which would silently miss near-dup pairs. */
-  private def chain(spark: SparkSession, dir: String, v: Long): Seq[Long] =
-    VersionedState.chain(spark, dir, v, Subframes, "semantic index")(
-      readMetaRow(spark, dir, _)._2)
 
   /** Train on the standing corpus and write v=0 as a FULL frame.
     * Refuses a directory already holding a committed version (the
@@ -170,225 +105,81 @@ object SemanticIndexStore {
            nlist: Int = 0, lloydIters: Int = 2,
            maxGroupSize: Int = Dedup.DefaultMaxGroupSize): Long = {
     val spark = df.sparkSession
-    VersionedState.requireUninitialized(spark, dir, Subframes,
-      "semantic index")
+    requireUninitialized(spark, dir)
     val (centroids, cells) = Similarity.semanticIndexBuild(
       df, idCol, vecCol, nlist, lloydIters, maxGroupSize)
-    require(centroids.nonEmpty,
-      s"semantic index at $dir: the corpus trained no centroids (empty or " +
-        "all-null vectors) — an empty standing index has nothing to probe")
-    // the train-time drift reference: assign-distance quantiles over
-    // the grouped cell frame's distinct vectors, recomputed through the
-    // same kernel every later driftReport batch goes through
-    val (p50, p99) = Similarity.assignDistQuantiles(
-      Similarity.assignDistances(cells, "vv", centroids),
-      s"semantic index at $dir: init")
-    commitVersion(spark, dir, 0L, centroids, cells,
+    // quantiles over the grouped cell frame's distinct vectors
+    val (p50, p99) = trainQuantiles(dir, cells, "vv", centroids)
+    commitCells(spark, dir, 0L, centroids, cells,
       SemMeta(centroids.head._2.length, centroids.length, maxGroupSize,
         p50, p99),
       full = true)
     0L
   }
 
-  /** Group and assign a new batch against the STANDING centroids
-    * ([[Similarity.semanticAssign]] — never a retrain) and write the
-    * result as version `expectedBase + 1` holding ONLY those rows —
-    * O(batch) write I/O and batch-mass shuffles only; readers union
-    * the delta chain ([[read]]), and the O(corpus) vector-keyed merge
-    * is [[compact]]'s scheduled job. The base must be the latest
-    * committed version (the [[MinhashIndexStore.append]]
-    * staleness/prune semantics). Ids must be unique across the merged
-    * corpora. Returns the version written. */
-  def append(spark: SparkSession, dir: String, batch: DataFrame,
-             idCol: String, vecCol: String, expectedBase: Long): Long = {
-    VersionedState.requireBase(spark, dir, expectedBase, Subframes,
-      "semantic index")
-    val (meta, _) = readMetaRow(spark, dir, expectedBase)
-    val centroids = readCentroids(spark, dir, expectedBase, meta)
-    // a re-dimensioned batch fails by name here: the assignment kernel
-    // would otherwise commit it with first-cell assignments whose
-    // cosines all score null — rows probes silently never return
-    val batchRows = Similarity.requireVecDim(batch, vecCol, meta.dim,
-      s"semantic index at $dir: append")
-    // an empty delta is a no-op, not a chain link: beyond chain
-    // hygiene, an empty cell-partitioned write would commit a
-    // FILE-LESS frame every later chain read fails to schema-infer
-    if (batchRows == 0L) expectedBase
-    else {
-      // the train-time quantiles copy forward unchanged: the centroids
-      // stand, so the drift reference must too
-      commitVersion(spark, dir, expectedBase + 1, centroids,
-        Similarity.semanticAssign(centroids, batch, idCol, vecCol,
-          meta.maxGroupSize), meta, full = false)
-      expectedBase + 1
-    }
-  }
+  /** Group the batch's identical vectors and assign them against the
+    * standing centroids ([[Similarity.semanticAssign]] — batch-mass
+    * shuffles and one argmin map). */
+  protected def assign(batch: DataFrame, idCol: String, vecCol: String,
+                       centroids: Seq[(Long, Seq[Double])],
+                       meta: SemMeta): DataFrame =
+    Similarity.semanticAssign(centroids, batch, idCol, vecCol,
+      meta.maxGroupSize)
 
-  /** Targeted REMOVAL from the standing index — the
-    * [[MinhashIndexStore.remove]] verb for the semantic store: writes
-    * version `expectedBase + 1` as a TOMBSTONE DELTA (an empty cell
-    * payload plus the withdrawn ids in the version's
-    * [[VersionedState.TombsSubframe]] frame) — O(tombstones) write
-    * I/O, never a corpus touch. Effect: [[probeLatest]] excludes every
-    * pair touching a live tombstoned id (equivalent to probing a fresh
-    * build over corpus-minus-removed by the [[MinhashIndexStore.remove]]
-    * purity argument — a group's cell, vector, and norm are pure
-    * functions of the vector value, unchanged by which members
-    * survive), and the next [[compact]] applies the tombstones to the
-    * merged member lists (a fully-removed group vanishes) and clears
-    * them. Tombstone semantics (chain-scoped, union across links,
-    * re-ingest-after-compact-only, unknown ids a no-op) and the
-    * crash/replay/base rules follow [[MinhashIndexStore.remove]]
-    * verbatim. An empty removal frame is a no-op returning the base.
-    * Returns the version written. */
-  def remove(spark: SparkSession, dir: String, removeIds: DataFrame,
-             idCol: String, expectedBase: Long): Long = {
-    VersionedState.requireBase(spark, dir, expectedBase, Subframes,
-      "semantic index")
-    val (meta, _) = readMetaRow(spark, dir, expectedBase)
-    val centroids = readCentroids(spark, dir, expectedBase, meta)
-    val tombs = VersionedState.normalizeTombs(removeIds, idCol,
-      s"semantic index at $dir: remove")
-    if (tombs.isEmpty) expectedBase
-    else {
-      VersionedState.commitVersion(spark, dir, expectedBase + 1,
-        "semantic index", Subframes) { scratch =>
-        // four tiny independent payloads, overlapped
-        // ([[VersionedState.writeConcurrently]]) — a tombstone delta is
-        // all fixed cost, four one-file writes
-        VersionedState.writeConcurrently(Seq(
-          () => Similarity.ivfCentroidsDf(spark, centroids)
-            .coalesce(1).write.mode("overwrite").parquet(s"$scratch/centroids"),
-          // empty-but-readable PLAIN cells (the IvfIndexStore.remove
-          // rationale: a cell-partitioned empty write is file-less and
-          // breaks every later chain read)
-          () => VersionedState.readCellChain(spark, dir,
-              Seq(chain(spark, dir, expectedBase).last), None)
-            .where(org.apache.spark.sql.functions.lit(false))
-            .write.mode("overwrite").parquet(s"$scratch/cells"),
-          () => writeMeta(spark, s"$scratch/meta", meta, full = false),
-          () => tombs.coalesce(1).write.mode("overwrite")
-            .parquet(s"$scratch/${VersionedState.TombsSubframe}")))
-      }
-      expectedBase + 1
-    }
-  }
-
-  /** The live (not-yet-compacted) tombstoned ids of a version's serving
-    * chain — one `tomb_id` column, empty-but-schema'd when the chain
-    * carries no removals. Read surface for audits and the specs. */
-  def liveTombs(spark: SparkSession, dir: String,
-                version: Option[Long] = None): DataFrame =
-    VersionedState.readLiveTombs(spark, dir,
-      chain(spark, dir, VersionedState.resolveVersion(spark, dir, Subframes,
-        "semantic index", version)))
-
-  /** Fold the head's delta chain into a new FULL version at head+1 —
-    * the O(corpus) [[Similarity.semanticCellsMerge]] vector-keyed
-    * merge as a scheduled job instead of a per-append tax. This is
-    * also where the `maxGroupSize` valve fires on the MERGED mass: an
-    * identical-vector group that outgrew the valve across links fails
-    * the compact by name, never a probe — and where live TOMBSTONES
-    * ([[remove]]) are applied and cleared: removed ids leave the
-    * merged member lists (one explode/anti-join/regroup pass over the
-    * merge's own corpus mass, broadcast on the tombstone side; a
+  /** The fold: the O(corpus) [[Similarity.semanticCellsMerge]]
+    * vector-keyed merge as a scheduled job instead of a per-append tax.
+    * This is also where the `maxGroupSize` valve fires on the MERGED
+    * mass: an identical-vector group that outgrew the valve across
+    * links fails the compact by name, never a probe — and where live
+    * TOMBSTONES ([[remove]]) are applied and cleared: removed ids leave
+    * the merged member lists (one explode/anti-join/regroup pass over
+    * the merge's own corpus mass, broadcast on the tombstone side; a
     * fully-removed group vanishes, and `gid` re-derives as the
     * surviving minimum member — the [[Similarity.semanticCellsMerge]]
     * invariant). A compact whose tombstones removed the ENTIRE corpus
-    * fails by name at commit (the empty-cells guard). No-op (returns
-    * the head) when the head is already full. Cadence: the measured
-    * chain-read tax is ~11% of the base probe cost per link (cell
-    * pruning holds at every length — the tax is per-scan overhead;
-    * SCALE.md "Chain-read economics") — compact at least fortnightly
-    * on daily appends. */
-  def compact(spark: SparkSession, dir: String): Long = {
+    * fails by name at commit (the empty-cells guard). Cadence: the
+    * measured chain-read tax is ~11% of the base probe cost per link
+    * (cell pruning holds at every length — the tax is per-scan
+    * overhead; SCALE.md "Chain-read economics") — compact at least
+    * fortnightly on daily appends. */
+  protected def fold(spark: SparkSession, dir: String, head: Long,
+                     meta: SemMeta): Unit = {
     import org.apache.spark.sql.functions.{broadcast, col, collect_list,
       element_at, explode, first, sort_array}
-    val head = latestVersion(spark, dir).getOrElse(
-      throw new IllegalArgumentException(
-        s"semantic index at $dir has no committed version to compact"))
-    val (meta, full) = readMetaRow(spark, dir, head)
-    if (full) head
-    else {
-      val links = chain(spark, dir, head)
-      val merged = Similarity.semanticCellsMerge(
-        links.map(w =>
-          VersionedState.readCellChain(spark, dir, Seq(w), None)),
-        meta.maxGroupSize)
-      val applied =
-        if (!VersionedState.hasLiveTombs(spark, dir, links)) merged
-        else merged.select(col("cell"), col("vv"), col("vn"),
-            explode(col("ids")).as("id"))
-          .join(broadcast(VersionedState.readLiveTombs(spark, dir, links)),
-            col("id") === col("tomb_id"), "left_anti")
-          .groupBy("vv").agg(
-            first(col("cell")).as("cell"),
-            first(col("vn")).as("vn"),
-            sort_array(collect_list(col("id"))).as("ids"))
-          .select(col("cell"), element_at(col("ids"), 1).as("gid"),
-            col("vv"), col("vn"), col("ids"))
-      commitVersion(spark, dir, head + 1,
-        readCentroids(spark, dir, head, meta), applied, meta,
-        full = true)
-      head + 1
-    }
-  }
-
-  /** Delete versions no longer needed to read any version ≥
-    * `keepFrom`: everything strictly below `keepFrom`'s chain BASE
-    * (the newest full version at or below it), plus crash debris below
-    * that floor. Deltas make the naive "delete < keepFrom" unsafe — a
-    * surviving version's chain may dip below the floor — so the floor
-    * clamps to the chain base and can never orphan a link; space
-    * reclamation advances as scheduled [[compact]] runs introduce
-    * newer full versions. Never prunes the latest committed version.
-    * Returns the pruned version numbers. */
-  def prune(spark: SparkSession, dir: String, keepFrom: Long): Seq[Long] =
-    VersionedState.pruneToChainBase(spark, dir, keepFrom, Subframes,
-      "semantic index")(readMetaRow(spark, dir, _)._2)
-
-  /** The version's centroid table, tamper-checked against its
-    * persisted meta. */
-  private def readCentroids(spark: SparkSession, dir: String, v: Long,
-                            meta: SemMeta): Seq[(Long, Seq[Double])] = {
-    val centroids = Similarity.ivfCentroidsFromDf(
-      VersionedState.cachedVersionFrame(spark, s"$dir/v=$v/centroids"))
-    require(centroids.nonEmpty && centroids.head._2.length == meta.dim,
-      s"semantic index at $dir v=$v: centroid table does not match its " +
-        s"persisted meta ($meta) — the version directory was tampered with")
-    centroids
+    val links = chain(spark, dir, head)
+    val merged = Similarity.semanticCellsMerge(
+      links.map(w => VersionedState.readCellChain(spark, dir, Seq(w), None)),
+      meta.maxGroupSize)
+    val applied =
+      if (!hasLiveTombs(spark, dir, links)) merged
+      else merged.select(col("cell"), col("vv"), col("vn"),
+          explode(col("ids")).as("id"))
+        .join(broadcast(readLiveTombs(spark, dir, links)),
+          col("id") === col("tomb_id"), "left_anti")
+        .groupBy("vv").agg(
+          first(col("cell")).as("cell"),
+          first(col("vn")).as("vn"),
+          sort_array(collect_list(col("id"))).as("ids"))
+        .select(col("cell"), element_at(col("ids"), 1).as("gid"),
+          col("vv"), col("vn"), col("ids"))
+    commitCells(spark, dir, head + 1,
+      readCentroids(spark, dir, head, meta), applied, meta, full = true)
   }
 
   /** Load a pinned version (or the latest committed): centroids, meta,
-    * and the UNION of its delta chain's cell frames
-    * ([[VersionedState.readCellChain]]). A missing or uncommitted pin
-    * fails by name. The cell frame is RAW: live tombstones are NOT
-    * applied here (member lists carry the gids the grouped rows key on
-    * — the [[MinhashIndexStore.read]] rationale); [[probeLatest]]
-    * honors them on its output, [[compact]] on the merged lists. */
+    * and the UNION of its delta chain's cell frames. A missing or
+    * uncommitted pin fails by name. The cell frame is RAW: live
+    * tombstones are NOT applied here (member lists carry the gids the
+    * grouped rows key on — the [[MinhashIndexStore.read]] rationale);
+    * [[probeLatest]] honors them on its output, [[compact]] on the
+    * merged lists. */
   def read(spark: SparkSession, dir: String,
            version: Option[Long] = None): LoadedSemIndex = {
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "semantic index", version)
-    val (meta, _) = readMetaRow(spark, dir, v)
+    val v = resolve(spark, dir, version)
+    val meta = readMeta(spark, dir, v)
     LoadedSemIndex(v, readCentroids(spark, dir, v, meta),
-      VersionedState.readCellChain(spark, dir, chain(spark, dir, v), None),
-      meta)
+      VersionedState.readCellChain(spark, dir, chain(spark, dir, v), None), meta)
   }
-
-  /** Chain length of `version` (the latest committed one when None) —
-    * the compaction-cadence term (SCALE.md "Chain-read economics":
-    * cell pruning holds at every length, so this store's chain tax is
-    * per-scan overhead; compact at ~9 links), by a META-ONLY walk: one
-    * tiny one-row parquet read per link, no cell data touched — cheap
-    * enough for a maintenance loop to poll on every append.
-    * [[chainHealth]] additionally aggregates the chain's cell frames;
-    * poll THIS for the cadence and run the health check when the
-    * cadence trips. */
-  def chainLength(spark: SparkSession, dir: String,
-                  version: Option[Long] = None): Int =
-    chain(spark, dir, VersionedState.resolveVersion(spark, dir, Subframes,
-      "semantic index", version)).length
 
   /** What [[chainHealth]] reports — [[MinhashIndexStore.ChainHealth]]'s
     * analogue for the identical-vector groups: `maxMergedGroup` is the
@@ -397,10 +188,8 @@ object SemanticIndexStore {
     * corpora, and a vector value's per-link member lists are disjoint).
     * This store has no bucket table, so there is no bound term. */
   final case class ChainHealth(version: Long, chainLength: Int,
-                               maxGroupSize: Int, maxMergedGroup: Long) {
-    /** The merged member-list valve WILL fire at the next compact. */
-    def groupValveExceeded: Boolean = maxMergedGroup > maxGroupSize
-  }
+                               maxGroupSize: Int, maxMergedGroup: Long)
+    extends GroupValveHealth
 
   /** Read-only chain health for the maintenance scheduler — the
     * [[MinhashIndexStore.chainHealth]] rationale applied to this
@@ -414,10 +203,9 @@ object SemanticIndexStore {
   def chainHealth(spark: SparkSession, dir: String,
                   version: Option[Long] = None): ChainHealth = {
     import org.apache.spark.sql.functions.{col, max, size, sum}
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "semantic index", version)
+    val v = resolve(spark, dir, version)
     val links = chain(spark, dir, v)
-    val (meta, _) = readMetaRow(spark, dir, v)
+    val meta = readMeta(spark, dir, v)
     val merged = VersionedState.readCellChain(spark, dir, links, None)
       .groupBy("vv").agg(sum(size(col("ids"))).as("m"))
       .agg(max(col("m"))).head()
@@ -425,72 +213,23 @@ object SemanticIndexStore {
       if (merged.isNullAt(0)) 0L else merged.getLong(0))
   }
 
-  /** The centroid-staleness signal: profile a candidate batch's
-    * assign distances against the version's persisted TRAIN-TIME
-    * quantiles ([[Similarity.AssignDriftReport]]). Appends assign
-    * against standing centroids by design and retraining is an
-    * explicit rebuild — this report is the operator's TRIGGER for that
-    * rebuild: an in-distribution batch lands `fracBeyondTrainP99` near
-    * 0.01 (the p99's own mass); a drifted one several times that.
-    * O(batch) — one narrow argmin map, a broadcast join, one aggregate
-    * — cheap enough to run on every append batch. The rebuild-cadence
-    * rule is documented in SCALE.md ("Centroid drift"). Fails by name
-    * on a re-dimensioned or unscoreable batch. */
-  def driftReport(spark: SparkSession, dir: String, batch: DataFrame,
-                  vecCol: String,
-                  version: Option[Long] = None): Similarity.AssignDriftReport = {
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "semantic index", version)
-    val (meta, _) = readMetaRow(spark, dir, v)
-    val centroids = readCentroids(spark, dir, v, meta)
-    Similarity.requireVecDim(batch, vecCol, meta.dim,
-      s"semantic index at $dir: drift report")
-    Similarity.assignDriftReport(batch, vecCol, centroids,
-      meta.assignP50, meta.assignP99, s"semantic index at $dir: drift report")
-  }
-
   /** The production probe entry point: semantic near-dup pairs of
     * `batch` against the latest committed version (or a pinned one),
     * always with the centroids the standing cells were assigned under.
-    * The version, meta, and chain resolve ONCE; the only cell frame
-    * built is the pruned one the probe actually scans.
-    *
-    * Live tombstones ([[remove]]) are honored on the probe's OUTPUT
-    * pairs, not by rewriting the cell frames (whose gids are member-
-    * list heads — the [[MinhashIndexStore.probeLatest]] rationale):
-    * two broadcast anti-joins on candidate-mass rows, behind an
-    * fs-only existence check so the no-removals case pays nothing. */
+    * The version, meta, and chain resolve ONCE; the batch only pairs
+    * within its own argmin cells (one per distinct vector, ≤ nlist
+    * ids), so they become a static partition filter and every chain
+    * link's scan reads only the touched cell directories. Live
+    * tombstones ([[remove]]) are honored on the probe's OUTPUT pairs
+    * (the [[MinhashIndexStore.probeLatest]] rationale). */
   def probeLatest(spark: SparkSession, dir: String, batch: DataFrame,
                   idCol: String, vecCol: String, threshold: Double,
                   version: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val v = VersionedState.resolveVersion(spark, dir, Subframes,
-      "semantic index", version)
-    val (meta, _) = readMetaRow(spark, dir, v)
-    val centroids = readCentroids(spark, dir, v, meta)
-    // a re-dimensioned probe batch would assign to the first cells and
-    // score null everywhere — zero pairs with zero errors — so it
-    // fails by name instead
-    Similarity.requireVecDim(batch, vecCol, meta.dim,
-      s"semantic index at $dir: probe")
-    // the batch only pairs within its own argmin cells (one per
-    // distinct vector, ≤ nlist ids — model-sized driver state), so
-    // they become a static partition filter: every chain link's scan
-    // reads the touched cell directories, not the whole frame
-    val links = chain(spark, dir, v)
-    val touched = Similarity.ivfProbeCells(batch, vecCol,
-      centroids, nprobe = 1)
-    val pairs = Similarity.semanticDedupBatch(centroids,
-      VersionedState.readCellChain(spark, dir, links, Some(touched)),
-      batch, idCol, vecCol, threshold, meta.maxGroupSize)
-    if (!VersionedState.hasLiveTombs(spark, dir, links)) pairs
-    else {
-      val tombs = VersionedState.readLiveTombs(spark, dir, links)
-      pairs
-        .join(broadcast(tombs.select(col("tomb_id").as("_ta"))),
-          col("id_a") === col("_ta"), "left_anti")
-        .join(broadcast(tombs.select(col("tomb_id").as("_tb"))),
-          col("id_b") === col("_tb"), "left_anti")
-    }
+    val (meta, centroids, links, touched) =
+      probeTarget(spark, dir, batch, vecCol, nprobe = 1, version)
+    minusTombPairs(spark, dir, links,
+      Similarity.semanticDedupBatch(centroids,
+        VersionedState.readCellChain(spark, dir, links, Some(touched)),
+        batch, idCol, vecCol, threshold, meta.maxGroupSize))
   }
 }

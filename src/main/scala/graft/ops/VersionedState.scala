@@ -3,11 +3,10 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** The shared versioned-snapshot commit protocol behind
-  * [[MinhashIndexStore]], [[SemanticIndexStore]], and
-  * [[IvfIndexStore]] — one implementation of the rules every persisted
-  * incremental index here follows (the [[graft.streaming.CdcStream]]
-  * rules):
+/** The shared versioned-snapshot commit protocol behind every
+  * [[VersionedStore]] and the accepted sinks' archive chains — one
+  * implementation of the rules every persisted incremental state here
+  * follows (the [[graft.streaming.CdcStream]] rules):
   *
   *  - state lives under `dir/v=N`, one immutable directory per
   *    version, each holding a fixed set of named parquet subframes;
@@ -380,74 +379,14 @@ private[graft] object VersionedState {
     }
   }
 
-  /** Refuse to initialize a directory that already holds a COMMITTED
-    * version: pointing a fresh builder at a standing index would
-    * rebuild v=0 from the new corpus alone, silently dropping it.
-    * Scratch debris (no committed version) does not block — crash
-    * replay of init is just running init again. */
-  def requireUninitialized(spark: SparkSession, dir: String,
-                           subframes: Seq[String], what: String): Unit = {
-    val (fs, path) = fsPath(spark, dir)
-    val existing = versions(fs, path).filter(committed(fs, dir, _, subframes))
-    require(existing.isEmpty,
-      s"$what at $dir already holds committed versions " +
-        s"(${existing.sorted.map("v=" + _).mkString(",")}) — init would " +
-        "rebuild v=0 from the new corpus alone, silently dropping the " +
-        "standing index; append onto the latest version, or explicitly " +
-        "delete the directory to start over")
-  }
-
-  /** Require `expectedBase` to BE the latest committed version — the
-    * append staleness rule, with the three-way message triage (stale /
-    * never-committed / pruned-or-uninitialized) every store shares. */
-  def requireBase(spark: SparkSession, dir: String, expectedBase: Long,
-                  subframes: Seq[String], what: String): Unit = {
-    val latest = latestVersion(spark, dir, subframes)
-    require(latest.contains(expectedBase),
-      s"$what at $dir: append expected base v=$expectedBase but the " +
-        s"latest committed version is ${latest.map("v=" + _).getOrElse("<none>")} — " +
-        (latest match {
-          case Some(l) if l > expectedBase =>
-            "another maintainer already advanced the index; re-read the head " +
-              "and retry the append on it"
-          case Some(_) =>
-            "the expected base was never committed (crashed append?); retry " +
-              "from the committed head"
-          case None =>
-            "the base was pruned or the index was never initialized"
-        }))
-  }
-
-  /** Resolve a read target: the pinned version when `version` is
-    * given — failing by name if it is missing or uncommitted (reading
-    * it as parquet would either error opaquely or, with an explicit
-    * schema, silently return 0 rows — an empty index "finds" nothing)
-    * — or the latest committed version otherwise. Shared by every
-    * store's read path. */
-  def resolveVersion(spark: SparkSession, dir: String,
-                     subframes: Seq[String], what: String,
-                     version: Option[Long]): Long = version match {
-    case Some(p) =>
-      val (fs, _) = fsPath(spark, dir)
-      require(committed(fs, dir, p, subframes),
-        s"$what at $dir has no committed version v=$p " +
-          s"(latest committed: ${latestVersion(spark, dir, subframes)
-            .map("v=" + _).getOrElse("<none>")})")
-      p
-    case None =>
-      latestVersion(spark, dir, subframes).getOrElse(
-        throw new IllegalArgumentException(
-          s"$what at $dir has no committed version"))
-  }
-
   /** The version chain serving `v`, newest first: `v` and the delta
     * versions below it down to (and including) the nearest FULL
     * version, where `isFull(w)` reads the store's persisted full-bit
     * (each store keeps it in its own meta schema). Every link must be
     * committed — a cut chain (a pruner deleted a link the protocol
     * protects) fails by name rather than answering from a partial
-    * corpus. Shared by all three stores so the chain rules cannot
-    * drift between them. */
+    * corpus. Shared by every chain so the rules cannot drift between
+    * them. */
   def chain(spark: SparkSession, dir: String, v: Long,
             subframes: Seq[String], what: String)
            (isFull: Long => Boolean): Seq[Long] = {
@@ -516,61 +455,8 @@ private[graft] object VersionedState {
   }
 
   /** The OPTIONAL per-version tombstone subframe (`dir/v=N/tombs`, one
-    * `tomb_id: long` column) — the targeted-removal verb the
-    * append-only stores lacked: a `remove` writes an O(tombstones)
-    * delta version whose tombs frame names the documents withdrawn
-    * (takedown, opt-out, discovered contamination), probes exclude the
-    * named ids, and the next [[MinhashIndexStore.compact]]-class fold
-    * APPLIES the tombstones to the merged state and clears them — so
-    * removal never costs an O(corpus) rebuild and a compacted chain
-    * carries no removal debt. The subframe is deliberately NOT in any
-    * store's committed-ness list: versions written before removal
-    * existed stay committed, and the atomic version rename already
-    * guarantees a tombs frame can never be half-visible. Tombstones are
-    * CHAIN-SCOPED: a removal is live while its link is in the serving
-    * chain and gone once a later full version (which absorbed it)
-    * starts the chain — exactly the delta rules every other subframe
-    * follows. */
+    * `tomb_id: long` column) — see [[IdKeyedStore]]. */
   val TombsSubframe = "tombs"
-
-  /** True iff any of `links` carries a committed tombs frame — an
-    * fs-existence walk, no Spark job, so the no-removals common case
-    * adds zero query-time cost to a probe. */
-  def hasLiveTombs(spark: SparkSession, dir: String, links: Seq[Long]): Boolean = {
-    val (fs, _) = fsPath(spark, dir)
-    links.exists(w => fs.exists(new Path(s"$dir/v=$w/$TombsSubframe/_SUCCESS")))
-  }
-
-  /** The live tombstone ids across `links` (one `tomb_id` column;
-    * duplicates possible when the same id was removed twice — harmless
-    * to the anti-join consumers). Empty-but-schema'd when no link
-    * carries removals, so callers compose without existence checks. */
-  def readLiveTombs(spark: SparkSession, dir: String, links: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val (fs, _) = fsPath(spark, dir)
-    val present = links.filter(w =>
-      fs.exists(new Path(s"$dir/v=$w/$TombsSubframe/_SUCCESS")))
-    if (present.isEmpty)
-      spark.range(0).select(col("id").as("tomb_id"))
-    else present.map(w =>
-      cachedVersionFrame(spark, s"$dir/v=$w/$TombsSubframe"))
-      .reduce(_ unionByName _).select("tomb_id")
-  }
-
-  /** Normalize a caller's removal frame to the persisted tombs schema:
-    * one non-null, distinct `tomb_id: long` column. Fails by name on a
-    * frame without the id column (select would throw opaquely). The
-    * distinct is an O(tombstones) shuffle paid once at remove time so
-    * every later probe's broadcast ships no duplicates. */
-  def normalizeTombs(removeIds: DataFrame, idCol: String,
-                     what: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    require(removeIds.columns.contains(idCol),
-      s"$what: the removal frame has no column '$idCol' " +
-        s"(has: ${removeIds.columns.mkString(", ")})")
-    removeIds.select(col(idCol).cast("long").as("tomb_id"))
-      .where(col("tomb_id").isNotNull).distinct()
-  }
 
   private val ScratchRe = "\\.(?:tmp|debris)-v=(\\d+)-.*".r
   private val DebrisRe = "\\.debris-v=(\\d+)-.*".r

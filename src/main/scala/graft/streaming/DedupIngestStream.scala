@@ -91,24 +91,18 @@ object DedupIngestStream {
                                   checkpointDir: String,
                                   acceptedStatsCols: Seq[String] = Nil): BatchOutcome = {
     val spark = batch.sparkSession
-    IngestProtocol.ownerCheck(spark, indexDir, batchId, checkpointDir)
-    val head = MinhashIndexStore.latestVersion(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"dedup ingest at $indexDir: no committed index version — " +
-          "MinhashIndexStore.init the store over the standing corpus (an " +
-          "empty frame is a legal corpus) before starting the stream"))
-    val (base, replay) = IngestProtocol.resolveBase(spark, indexDir, batchId,
-      head, "dedup ingest")
-    // replay with an advanced head means the append committed last time;
-    // a same-head replay redoes it (the store's own replay rule)
-    val appendCommitted = replay && head > base
     val outPath = s"$acceptedDir/batch=$batchId"
-    // EVERYTHING that can register an operator-internal cache — the
-    // probe, the append's delta build, the health check, the compact —
-    // runs inside ONE scope, released per batch: a long-running stream
-    // must accumulate no cache entries (every registered frame here is
-    // batch- or candidate-mass, but per-batch leaks still sum)
-    OpCaches.scoped {
+    // the health check guards every scheduled compact (merged-mass
+    // reads only when the cadence trips)
+    IngestProtocol.maintainBatch(spark, MinhashIndexStore, indexDir, batchId,
+      checkpointDir, "dedup ingest",
+      "no committed index version — MinhashIndexStore.init the store over " +
+        "the standing corpus (an empty frame is a legal corpus) before " +
+        "starting the stream",
+      compactEvery,
+      () => IngestProtocol.requireGroupValve("dedup ingest", indexDir,
+        MinhashIndexStore.chainHealth(spark, indexDir), "group",
+        "near-dup group")) { at =>
       // the micro-batch is consumed several times (file-count bound,
       // probe build, survivor joins) — cache it for the batch, released
       // with the scope
@@ -135,38 +129,21 @@ object DedupIngestStream {
       // rationale)
       val acceptedOnDisk = spark.read.parquet(outPath)
       val version =
-        if (appendCommitted) head
+        if (at.appendCommitted) at.head
         else MinhashIndexStore.append(spark, indexDir, acceptedOnDisk,
-          idCol, textCol, expectedBase = base)
-      // maintenance: meta-only poll every batch; mass-reading health
-      // check and the O(corpus) compact only when the cadence trips
-      val compactedTo =
-        if (MinhashIndexStore.chainLength(spark, indexDir) > compactEvery) {
-          val health = MinhashIndexStore.chainHealth(spark, indexDir)
-          if (health.groupValveExceeded)
-            throw new IllegalStateException(
-              s"dedup ingest at $indexDir: merged group mass " +
-                s"${health.maxMergedGroup} exceeds the persisted " +
-                s"maxGroupSize=${health.maxGroupSize} at chain length " +
-                s"${health.chainLength} — the scheduled compact WILL fail " +
-                "(the loop's own appends cannot grow a group, so this came " +
-                "from the init corpus or an out-of-band append); split the " +
-                "offending near-dup group or rebuild with a larger valve")
-          val c = MinhashIndexStore.compact(spark, indexDir)
-          MinhashIndexStore.prune(spark, indexDir, keepFrom = c)
-          Some(c)
-        } else None
-      // the accepted sink's lifecycle rides the SAME cadence trip:
-      // replay-dead batch directories (strictly below this batch) fold
-      // into the archive so the directory count tracks cadence trips,
-      // not micro-batches ([[AcceptedSink]]; read the corpus through
-      // AcceptedSink.readAccepted once folding has run)
-      val foldedTo = compactedTo.flatMap(_ =>
-        AcceptedSink.fold(spark, acceptedDir, belowBatch = batchId,
-          statsCols = acceptedStatsCols))
-      IngestProtocol.sweepLedger(spark, indexDir, batchId)
-      BatchOutcome(batchId, base, version, acceptedOnDisk.count(), replay,
-        appendCommitted, compactedTo, foldedTo)
+          idCol, textCol, expectedBase = at.base)
+      compactedTo => {
+        // the accepted sink's lifecycle rides the SAME cadence trip:
+        // replay-dead batch directories (strictly below this batch)
+        // fold into the archive so the directory count tracks cadence
+        // trips, not micro-batches ([[AcceptedSink]]; read the corpus
+        // through AcceptedSink.readAccepted once folding has run)
+        val foldedTo = compactedTo.flatMap(_ =>
+          AcceptedSink.fold(spark, acceptedDir, belowBatch = batchId,
+            statsCols = acceptedStatsCols))
+        BatchOutcome(batchId, at.base, version, acceptedOnDisk.count(),
+          at.replay, at.appendCommitted, compactedTo, foldedTo)
+      }
     }
   }
 
@@ -192,14 +169,9 @@ object DedupIngestStream {
                       threshold: Double = 0.5,
                       compactEvery: Int = 8,
                       acceptedStatsCols: Seq[String] = Nil): StreamingQuery = {
-    require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexDir, acceptedDir, idCol, textCol,
-          threshold, compactEvery, checkpointDir, acceptedStatsCols)
-        (): Unit
-      }
-      .start()
+    IngestProtocol.startSink(docs, checkpointDir, compactEvery) { (batch, batchId) =>
+      processBatch(batch, batchId, indexDir, acceptedDir, idCol, textCol,
+        threshold, compactEvery, checkpointDir, acceptedStatsCols)
+    }
   }
 }

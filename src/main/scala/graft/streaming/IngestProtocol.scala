@@ -2,12 +2,18 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit, when}
+import org.apache.spark.sql.streaming.StreamingQuery
+
+import graft.ops.{GroupValveHealth, OpCaches, Similarity, VersionedStore}
 
 /** The machinery every store-maintaining ingest stream shares —
-  * factored so [[DedupIngestStream]], [[SemanticIngestStream]], and
-  * [[IvfIngestStream]] cannot drift on the replay rules they all
-  * promise:
+  * factored so [[DedupIngestStream]], [[SemanticIngestStream]],
+  * [[IvfIngestStream]] and [[LinkageIngestStream]] cannot drift on the
+  * replay rules they all promise:
   *
+  *  - the MAINTAINER LOOP ([[maintainBatch]]): owner check, head, ledger
+  *    base, then one cache scope around the store-specific step, the
+  *    compaction cadence and the ledger sweep;
   *  - the OWNER STAMP (`_ingest_owner`): binds a store to the one
   *    checkpoint that maintains it, refusing a fresh checkpoint whose
   *    restarted batch 0 would mis-read the standing ledger as its own
@@ -255,6 +261,103 @@ private[graft] object IngestProtocol {
       case _ => None
     }
   }
+
+  /** Where a batch stands against its store: the head it found, the
+    * base its ledger entry holds, and whether it is a replay. */
+  final case class BatchBase(head: Long, base: Long, replay: Boolean) {
+    /** A replay with an advanced head: the append committed last time
+      * (a same-head replay redoes it — the store's own replay rule). */
+    def appendCommitted: Boolean = replay && head > base
+  }
+
+  /** One micro-batch of a store maintainer — the skeleton the four
+    * loops share. Batch 0 passes the owner check; an uninitialized store
+    * fails by name (`$what at $dir: $uninitialized`) before any ledger
+    * write; the ledger resolves the base. Then, inside ONE
+    * [[OpCaches.scoped]] block (everything the step, health check and
+    * compact register is released per batch, so a long-running stream
+    * accumulates no cache entries): the store-specific `step` (probe,
+    * survivor write, append — skipped by the step itself when
+    * `appendCommitted`), the cadence — a meta-only chain poll every
+    * batch, and when the chain passes `compactEvery` links the
+    * `beforeCompact` valve, the O(state) compact and a prune to it —
+    * then the step's continuation with the compacted version, and the
+    * ledger sweep. */
+  def maintainBatch[O](spark: SparkSession, store: VersionedStore, dir: String,
+                       batchId: Long, checkpointDir: String, what: String,
+                       uninitialized: String, compactEvery: Int,
+                       beforeCompact: () => Unit = () => ())
+                      (step: BatchBase => Option[Long] => O): O = {
+    ownerCheck(spark, dir, batchId, checkpointDir)
+    val head = store.latestVersion(spark, dir).getOrElse(
+      throw new IllegalStateException(s"$what at $dir: $uninitialized"))
+    val (base, replay) = resolveBase(spark, dir, batchId, head, what)
+    OpCaches.scoped {
+      val finish = step(BatchBase(head, base, replay))
+      val compactedTo =
+        if (store.chainLength(spark, dir) > compactEvery) {
+          beforeCompact()
+          val c = store.compact(spark, dir)
+          store.prune(spark, dir, keepFrom = c)
+          Some(c)
+        } else None
+      val out = finish(compactedTo)
+      sweepLedger(spark, dir, batchId)
+      out
+    }
+  }
+
+  /** Start a maintainer's streaming query: `process` runs each
+    * micro-batch under `checkpointDir`. */
+  def startSink(stream: DataFrame, checkpointDir: String, compactEvery: Int)
+               (process: (DataFrame, Long) => Unit): StreamingQuery = {
+    require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => process(batch, batchId) }
+      .start()
+  }
+
+  /** The pre-compact valve of the two dedup loops: fail the batch by
+    * name, chain intact, when the chain's merged group mass already
+    * exceeds the persisted valve — the scheduled compact WOULD fail. A
+    * loop's own appends cannot grow a group (an exact copy is rejected
+    * before it reaches the index), so the pressure came from the init
+    * corpus or an out-of-band maintainer. */
+  def requireGroupValve(what: String, dir: String, health: GroupValveHealth,
+                        group: String, offending: String): Unit =
+    if (health.groupValveExceeded)
+      throw new IllegalStateException(
+        s"$what at $dir: merged $group mass ${health.maxMergedGroup} exceeds " +
+          s"the persisted maxGroupSize=${health.maxGroupSize} at chain length " +
+          s"${health.chainLength} — the scheduled compact WILL fail " +
+          "(the loop's own appends cannot grow a group, so this came " +
+          "from the init corpus or an out-of-band append); split the " +
+          s"offending $offending or rebuild with a larger valve")
+
+  /** The centroid-drift gate of the two vector loops: profile a
+    * non-empty batch (None for an empty one — nothing to profile) and
+    * HARD-FAIL it, by name, on the strong documented trigger
+    * `batchP50 > trainP99` (the TYPICAL new vector assigns farther out
+    * than the worst trained percentile — SCALE.md "Centroid drift"),
+    * once at least `minRows` vectors scored: a median over a handful of
+    * draws is one outlier wide. `harm` names what the loop would
+    * silently degrade. */
+  def driftGate(what: String, dir: String, batchId: Long, batchRows: Long,
+                minRows: Long, harm: String)
+               (report: => Similarity.AssignDriftReport): Option[Similarity.AssignDriftReport] =
+    if (batchRows == 0L) None
+    else {
+      val d = report
+      if (d.scoredRows >= minRows && d.batchP50 > d.trainP99)
+        throw new IllegalStateException(
+          s"$what at $dir: batch $batchId assigns with median distance " +
+            s"${d.batchP50} beyond the train-time p99 ${d.trainP99} " +
+            s"(fracBeyondTrainP99=${d.fracBeyondTrainP99}) — the standing " +
+            s"centroids no longer describe the corpus and $harm; retrain " +
+            "via an explicit rebuild (SCALE.md \"Centroid drift\")")
+      Some(d)
+    }
 
   /** Partition count that targets ~250k rows per output file (≈100 MB
     * parquet at document/vector row shapes) — the same row-mass bound

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.{IvfIndexStore, Similarity}
+import graft.ops.{IvfIndexStore, OpCaches, Similarity}
 
 /** Streaming maintainer for the IVF/ANN index — the third leg of the
   * ingest triad ([[DedupIngestStream]], [[SemanticIngestStream]]): a
@@ -49,52 +49,26 @@ object IvfIngestStream {
                                   checkpointDir: String,
                                   driftGateMinRows: Long = 16L): BatchOutcome = {
     val spark = batch.sparkSession
-    IngestProtocol.ownerCheck(spark, indexDir, batchId, checkpointDir)
-    val head = IvfIndexStore.latestVersion(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"ivf ingest at $indexDir: no committed index version — " +
-          "IvfIndexStore.init the store over the standing corpus before " +
-          "starting the stream (this store refuses an empty init: no " +
-          "corpus, no centroids, nothing to cell)"))
-    val (base, replay) = IngestProtocol.resolveBase(spark, indexDir, batchId,
-      head, "ivf ingest")
-    val appendCommitted = replay && head > base
-    // one scope around the whole batch — today's assignment kernels
-    // register no caches, but the triad's loops share the per-batch
-    // release contract so a future kernel cache cannot silently leak
-    // across a long-running stream; the micro-batch itself is cached
-    // for its consumers (row count, drift profile, append build)
-    graft.ops.OpCaches.scoped {
-      val b = graft.ops.OpCaches.registered(batch)
+    IngestProtocol.maintainBatch(spark, IvfIndexStore, indexDir, batchId,
+      checkpointDir, "ivf ingest",
+      "no committed index version — IvfIndexStore.init the store over the " +
+        "standing corpus before starting the stream (this store refuses an " +
+        "empty init: no corpus, no centroids, nothing to cell)",
+      compactEvery) { at =>
+      // the micro-batch is cached for its consumers (row count, drift
+      // profile, append build)
+      val b = OpCaches.registered(batch)
       val batchRows = b.count()
-      val drift =
-        if (batchRows == 0L) None
-        else {
-          val d = IvfIndexStore.driftReport(spark, indexDir, b, vecCol)
-          if (d.scoredRows >= driftGateMinRows && d.batchP50 > d.trainP99)
-            throw new IllegalStateException(
-              s"ivf ingest at $indexDir: batch $batchId assigns with median " +
-                s"distance ${d.batchP50} beyond the train-time p99 " +
-                s"${d.trainP99} (fracBeyondTrainP99=${d.fracBeyondTrainP99}) " +
-                "— the standing centroids no longer describe the corpus and " +
-                "appending into mis-fitting cells would silently degrade " +
-                "probe recall; retrain via an explicit rebuild (SCALE.md " +
-                "\"Centroid drift\")")
-          Some(d)
-        }
+      val drift = IngestProtocol.driftGate("ivf ingest", indexDir, batchId,
+        batchRows, driftGateMinRows,
+        "appending into mis-fitting cells would silently degrade probe recall")(
+        IvfIndexStore.driftReport(spark, indexDir, b, vecCol))
       val version =
-        if (appendCommitted) head
+        if (at.appendCommitted) at.head
         else IvfIndexStore.append(spark, indexDir, b, idCol, vecCol,
-          expectedBase = base)
-      val compactedTo =
-        if (IvfIndexStore.chainLength(spark, indexDir) > compactEvery) {
-          val c = IvfIndexStore.compact(spark, indexDir)
-          IvfIndexStore.prune(spark, indexDir, keepFrom = c)
-          Some(c)
-        } else None
-      IngestProtocol.sweepLedger(spark, indexDir, batchId)
-      BatchOutcome(batchId, base, version, batchRows, replay, appendCommitted,
-        drift, compactedTo)
+          expectedBase = at.base)
+      compactedTo => BatchOutcome(batchId, at.base, version, batchRows,
+        at.replay, at.appendCommitted, drift, compactedTo)
     }
   }
 
@@ -110,14 +84,9 @@ object IvfIngestStream {
                     vecCol: String, checkpointDir: String,
                     compactEvery: Int = 9,
                     driftGateMinRows: Long = 16L): StreamingQuery = {
-    require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexDir, idCol, vecCol,
-          compactEvery, checkpointDir, driftGateMinRows)
-        (): Unit
-      }
-      .start()
+    IngestProtocol.startSink(vectors, checkpointDir, compactEvery) { (batch, batchId) =>
+      processBatch(batch, batchId, indexDir, idCol, vecCol,
+        compactEvery, checkpointDir, driftGateMinRows)
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.ops.{LinkageStore, OpCaches}
+import graft.ops.LinkageStore
 
 /** Streaming leg of incremental entity resolution — the
   * [[graft.ops.LinkageStore]] maintained by a production micro-batch
@@ -60,33 +60,20 @@ object LinkageIngestStream {
     * specs can drive batch ids (and replays) deterministically. */
   private[graft] def processBatch(batch: DataFrame, batchId: Long,
                                   storeDir: String, compactEvery: Int,
-                                  checkpointDir: String): BatchOutcome = {
-    val spark = batch.sparkSession
-    IngestProtocol.ownerCheck(spark, storeDir, batchId, checkpointDir)
-    val head = LinkageStore.latestVersion(spark, storeDir).getOrElse(
-      throw new IllegalStateException(
-        s"linkage ingest at $storeDir: no committed version — " +
-          "LinkageStore.init the store over the standing corpus before " +
-          "starting the stream (the init persists the comparison " +
-          "parameters every batch resolves under)"))
-    val (base, replay) = IngestProtocol.resolveBase(spark, storeDir, batchId,
-      head, "linkage ingest")
-    val appendCommitted = replay && head > base
-    OpCaches.scoped {
+                                  checkpointDir: String): BatchOutcome =
+    IngestProtocol.maintainBatch(batch.sparkSession, LinkageStore, storeDir,
+      batchId, checkpointDir, "linkage ingest",
+      "no committed version — LinkageStore.init the store over the standing " +
+        "corpus before starting the stream (the init persists the " +
+        "comparison parameters every batch resolves under)",
+      compactEvery) { at =>
       val version =
-        if (appendCommitted) head
-        else LinkageStore.append(spark, storeDir, batch, expectedBase = base)
-      val compactedTo =
-        if (LinkageStore.chainLength(spark, storeDir) > compactEvery) {
-          val c = LinkageStore.compact(spark, storeDir)
-          LinkageStore.prune(spark, storeDir, keepFrom = c)
-          Some(c)
-        } else None
-      IngestProtocol.sweepLedger(spark, storeDir, batchId)
-      BatchOutcome(batchId, base, version, replay, appendCommitted,
-        compactedTo)
+        if (at.appendCommitted) at.head
+        else LinkageStore.append(batch.sparkSession, storeDir, batch,
+          expectedBase = at.base)
+      compactedTo => BatchOutcome(batchId, at.base, version, at.replay,
+        at.appendCommitted, compactedTo)
     }
-  }
 
   /** VALUE TAKEDOWN against a loop-maintained linkage store — the
     * guarded form of [[LinkageStore.remove]] (see the object doc's
@@ -125,13 +112,8 @@ object LinkageIngestStream {
   def linkageIngestSink(rows: DataFrame, storeDir: String,
                         checkpointDir: String,
                         compactEvery: Int = 8): StreamingQuery = {
-    require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
-    rows.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storeDir, compactEvery, checkpointDir)
-        (): Unit
-      }
-      .start()
+    IngestProtocol.startSink(rows, checkpointDir, compactEvery) { (batch, batchId) =>
+      processBatch(batch, batchId, storeDir, compactEvery, checkpointDir)
+    }
   }
 }

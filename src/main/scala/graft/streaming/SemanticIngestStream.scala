@@ -84,49 +84,32 @@ object SemanticIngestStream {
                                   driftGateMinRows: Long = 16L,
                                   acceptedStatsCols: Seq[String] = Nil): BatchOutcome = {
     val spark = batch.sparkSession
-    IngestProtocol.ownerCheck(spark, indexDir, batchId, checkpointDir)
-    val head = SemanticIndexStore.latestVersion(spark, indexDir).getOrElse(
-      throw new IllegalStateException(
-        s"semantic ingest at $indexDir: no committed index version — " +
-          "SemanticIndexStore.init the store over the standing corpus " +
-          "before starting the stream (this store refuses an empty init: " +
-          "no corpus, no centroids, nothing to probe)"))
-    val (base, replay) = IngestProtocol.resolveBase(spark, indexDir, batchId,
-      head, "semantic ingest")
-    val appendCommitted = replay && head > base
     val outPath = s"$acceptedDir/batch=$batchId"
-    // everything below can register operator-internal caches (the
-    // probe's candidate frames, the append's grouped-vector build, the
-    // compact's merge) — one scope, released per batch, so a
-    // long-running stream accumulates no cache entries; the micro-batch
-    // itself is cached for its several consumers (drift profile, probe
-    // build, survivor joins, file-count bound)
-    OpCaches.scoped {
+    IngestProtocol.maintainBatch(spark, SemanticIndexStore, indexDir, batchId,
+      checkpointDir, "semantic ingest",
+      "no committed index version — SemanticIndexStore.init the store over " +
+        "the standing corpus before starting the stream (this store refuses " +
+        "an empty init: no corpus, no centroids, nothing to probe)",
+      compactEvery,
+      () => IngestProtocol.requireGroupValve("semantic ingest", indexDir,
+        SemanticIndexStore.chainHealth(spark, indexDir),
+        "identical-vector group", "group")) { at =>
+      // the micro-batch is cached for its several consumers (drift
+      // profile, probe build, survivor joins, file-count bound)
       val b = OpCaches.registered(batch)
       val batchRows = b.count()
       // drift gate BEFORE the probe: a batch the standing centroids
       // can't meaningfully assign would silently under-dedup
-      val drift =
-        if (batchRows == 0L) None
-        else {
-          val d = SemanticIndexStore.driftReport(spark, indexDir, b, vecCol)
-          if (d.scoredRows >= driftGateMinRows && d.batchP50 > d.trainP99)
-            throw new IllegalStateException(
-              s"semantic ingest at $indexDir: batch $batchId assigns with " +
-                s"median distance ${d.batchP50} beyond the train-time p99 " +
-                s"${d.trainP99} (fracBeyondTrainP99=${d.fracBeyondTrainP99}) " +
-                "— the standing centroids no longer describe the corpus and " +
-                "near-dup probing against them would silently under-dedup; " +
-                "retrain via an explicit rebuild (SCALE.md \"Centroid drift\")")
-          Some(d)
-        }
+      val drift = IngestProtocol.driftGate("semantic ingest", indexDir,
+        batchId, batchRows, driftGateMinRows,
+        "near-dup probing against them would silently under-dedup")(
+        SemanticIndexStore.driftReport(spark, indexDir, b, vecCol))
       val pairs = SemanticIndexStore.probeLatest(spark, indexDir, b,
         idCol, vecCol, threshold)
-      // file count bounded by row mass — the DedupIngestStream rationale
-      // (no shuffle in the survivor lineage, so the write would inherit
-      // the source partition count)
-      // schema policy before any byte lands (the DedupIngestStream
-      // rationale: a drifted batch fails by name here, not later)
+      // schema policy before any byte lands, and the file count bounded
+      // by row mass — the DedupIngestStream rationale (no shuffle in the
+      // survivor lineage, so the write would inherit the source
+      // partition count)
       AcceptedSink.requireSchemaCompatible(spark, acceptedDir, b)
       IngestProtocol.keepFirstSurvivors(b, pairs, idCol)
         .repartition(IngestProtocol.boundedFileCount(batchRows))
@@ -135,33 +118,18 @@ object SemanticIngestStream {
       // carries (the commitVersion rationale)
       val acceptedOnDisk = spark.read.parquet(outPath)
       val version =
-        if (appendCommitted) head
+        if (at.appendCommitted) at.head
         else SemanticIndexStore.append(spark, indexDir, acceptedOnDisk,
-          idCol, vecCol, expectedBase = base)
-      val compactedTo =
-        if (SemanticIndexStore.chainLength(spark, indexDir) > compactEvery) {
-          val health = SemanticIndexStore.chainHealth(spark, indexDir)
-          if (health.groupValveExceeded)
-            throw new IllegalStateException(
-              s"semantic ingest at $indexDir: merged identical-vector group " +
-                s"mass ${health.maxMergedGroup} exceeds the persisted " +
-                s"maxGroupSize=${health.maxGroupSize} at chain length " +
-                s"${health.chainLength} — the scheduled compact WILL fail " +
-                "(the loop's own appends cannot grow a group, so this came " +
-                "from the init corpus or an out-of-band append); split the " +
-                "offending group or rebuild with a larger valve")
-          val c = SemanticIndexStore.compact(spark, indexDir)
-          SemanticIndexStore.prune(spark, indexDir, keepFrom = c)
-          Some(c)
-        } else None
-      // accepted-sink lifecycle on the same cadence trip (the
-      // DedupIngestStream rationale — see [[AcceptedSink]])
-      val foldedTo = compactedTo.flatMap(_ =>
-        AcceptedSink.fold(spark, acceptedDir, belowBatch = batchId,
-          statsCols = acceptedStatsCols))
-      IngestProtocol.sweepLedger(spark, indexDir, batchId)
-      BatchOutcome(batchId, base, version, acceptedOnDisk.count(), replay,
-        appendCommitted, drift, compactedTo, foldedTo)
+          idCol, vecCol, expectedBase = at.base)
+      compactedTo => {
+        // accepted-sink lifecycle on the same cadence trip (the
+        // DedupIngestStream rationale — see [[AcceptedSink]])
+        val foldedTo = compactedTo.flatMap(_ =>
+          AcceptedSink.fold(spark, acceptedDir, belowBatch = batchId,
+            statsCols = acceptedStatsCols))
+        BatchOutcome(batchId, at.base, version, acceptedOnDisk.count(),
+          at.replay, at.appendCommitted, drift, compactedTo, foldedTo)
+      }
     }
   }
 
@@ -183,15 +151,10 @@ object SemanticIngestStream {
                          compactEvery: Int = 9,
                          driftGateMinRows: Long = 16L,
                          acceptedStatsCols: Seq[String] = Nil): StreamingQuery = {
-    require(compactEvery >= 1, s"compactEvery must be >= 1, got $compactEvery")
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, indexDir, acceptedDir, idCol, vecCol,
-          threshold, compactEvery, checkpointDir, driftGateMinRows,
-          acceptedStatsCols)
-        (): Unit
-      }
-      .start()
+    IngestProtocol.startSink(vectors, checkpointDir, compactEvery) { (batch, batchId) =>
+      processBatch(batch, batchId, indexDir, acceptedDir, idCol, vecCol,
+        threshold, compactEvery, checkpointDir, driftGateMinRows,
+        acceptedStatsCols)
+    }
   }
 }

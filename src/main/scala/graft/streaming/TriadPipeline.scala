@@ -280,19 +280,16 @@ object TriadPipeline {
           "committed and skip it, silently never ingesting its documents; " +
           "let the stream drain the batch, then retry")
     }
-    def headOf(latest: Option[Long], what: String): Long =
-      latest.getOrElse(throw new IllegalStateException(
-        s"triad takedown: $what has no committed version — the pipeline " +
+    def headOf(store: graft.ops.VersionedStore, what: String, dir: String): Long =
+      store.latestVersion(spark, dir).getOrElse(throw new IllegalStateException(
+        s"triad takedown: $what $dir has no committed version — the pipeline " +
           "was never initialized"))
     val mh = MinhashIndexStore.remove(spark, cfg.minhashDir, removeIds,
-      cfg.idCol, headOf(MinhashIndexStore.latestVersion(spark, cfg.minhashDir),
-        s"minhash store ${cfg.minhashDir}"))
+      cfg.idCol, headOf(MinhashIndexStore, "minhash store", cfg.minhashDir))
     val sem = SemanticIndexStore.remove(spark, cfg.semanticDir, removeIds,
-      cfg.idCol, headOf(SemanticIndexStore.latestVersion(spark, cfg.semanticDir),
-        s"semantic store ${cfg.semanticDir}"))
+      cfg.idCol, headOf(SemanticIndexStore, "semantic store", cfg.semanticDir))
     val ivf = IvfIndexStore.remove(spark, cfg.ivfDir, removeIds,
-      cfg.idCol, headOf(IvfIndexStore.latestVersion(spark, cfg.ivfDir),
-        s"ivf store ${cfg.ivfDir}"))
+      cfg.idCol, headOf(IvfIndexStore, "ivf store", cfg.ivfDir))
     // linkage takedown is ID→VALUE derivation: the store is value-keyed,
     // so withdraw exactly the values the removed documents carried that
     // NO surviving accepted document still carries (a shared value
@@ -306,8 +303,7 @@ object TriadPipeline {
       import graft.ops.LinkageStore
       if (!AcceptedSink.hasAccepted(spark, cfg.semanticAccepted)) None
       else {
-        val head = headOf(LinkageStore.latestVersion(spark, cfg.linkageDir),
-          s"linkage store ${cfg.linkageDir}")
+        val head = headOf(LinkageStore, "linkage store", cfg.linkageDir)
         val keyCols = st.blockCols :+ st.valueCol
         val corpus = AcceptedSink.readAccepted(spark, cfg.semanticAccepted)
         // EVERY key column filtered non-null, block columns included:
@@ -793,30 +789,18 @@ object TriadPipeline {
     // surface and the topology's last ledger (dedup ≥ semantic ≥ ivf ≥
     // linkage — the stage-ordering checks below read the seq order)
     val stores = Seq(
-      ("minhash store", cfg.minhashDir,
-        () => MinhashIndexStore.latestVersion(spark, cfg.minhashDir),
-        (v: Long) => MinhashIndexStore.chainLength(spark, cfg.minhashDir,
-          Some(v)): Unit),
-      ("semantic store", cfg.semanticDir,
-        () => SemanticIndexStore.latestVersion(spark, cfg.semanticDir),
-        (v: Long) => SemanticIndexStore.chainLength(spark, cfg.semanticDir,
-          Some(v)): Unit),
-      ("ivf store", cfg.ivfDir,
-        () => IvfIndexStore.latestVersion(spark, cfg.ivfDir),
-        (v: Long) => IvfIndexStore.chainLength(spark, cfg.ivfDir,
-          Some(v)): Unit)) ++ cfg.linkage.map(_ =>
-      ("linkage store", cfg.linkageDir,
-        () => graft.ops.LinkageStore.latestVersion(spark, cfg.linkageDir),
-        (_: Long) => graft.ops.LinkageStore.chainLength(spark,
-          cfg.linkageDir): Unit)).toSeq
+      ("minhash store", cfg.minhashDir, MinhashIndexStore),
+      ("semantic store", cfg.semanticDir, SemanticIndexStore),
+      ("ivf store", cfg.ivfDir, IvfIndexStore)) ++ cfg.linkage.map(_ =>
+      ("linkage store", cfg.linkageDir, graft.ops.LinkageStore)).toSeq
     val ledgerMaxes: Seq[Option[Long]] = stores.map {
-      case (name, dir, latest, chainLen) =>
-        val head = latest()
+      case (name, dir, store) =>
+        val head = store.latestVersion(spark, dir)
         head match {
           case None => finding(name, "error",
             s"$dir has no committed version — never initialized (the " +
               "loops refuse an uninitialized store by name at batch time)")
-          case Some(h) => checked(name)(chainLen(h)): Unit
+          case Some(h) => checked(name)(store.chainLength(spark, dir, Some(h))): Unit
         }
         val entries = checked(name)(
           IngestProtocol.ledgerEntries(spark, dir)).getOrElse(Seq.empty)

@@ -130,11 +130,22 @@ class LinkageStoreSpec extends SparkSpec {
       val v = LinkageStore.compact(spark, dir)
       assert(v === 3L)
       assert(LinkageStore.chainLength(spark, dir) === 1)
+      // a pinned version reports its own chain, like the other stores
+      assert(LinkageStore.chainLength(spark, dir, Some(1L)) === 2)
+      assert(LinkageStore.chainLength(spark, dir, Some(2L)) === 3)
       assert(storeLabels(dir) === before)
       // compact is idempotent on a full head
       assert(LinkageStore.compact(spark, dir) === v)
       LinkageStore.prune(spark, dir, keepFrom = v)
       assert(storeLabels(dir) === before)
+      // a pruned pin and an uninitialized store fail by name, not 0
+      val pruned = intercept[IllegalArgumentException](
+        LinkageStore.chainLength(spark, dir, Some(1L))).getMessage
+      assert(pruned.contains("no committed version v=1"), pruned)
+      val uninit = intercept[IllegalArgumentException](
+        LinkageStore.chainLength(spark, s"$dir-none")).getMessage
+      assert(uninit.contains("linkage store") &&
+        uninit.contains("no committed version"), uninit)
       // post-compact appends still answer the batch truth (the folded
       // edge state carries live pairs only)
       val b = df(("b1", "karla"))

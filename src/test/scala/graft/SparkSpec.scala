@@ -11,18 +11,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val session: SparkSession = EngineConf.session(4)
     .appName("graft-test")
     .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.optimizer.excludedRules", EngineConf.ExcludedOptimizerRules)
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      EngineConf.CanChangeCachedPlanPartitioning)
-    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      EngineConf.AqeMinPartitionSize)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .getOrCreate()
 }
