@@ -48,6 +48,19 @@ object SparkEntry {
       rm(new java.io.File(dir))
     }
 
+  /** A temp directory unique per (process, input dir), deleted at JVM
+    * exit: concurrent graft processes (a Verify while a Bench scale run
+    * is up) must not clobber or cross-read each other's files, and
+    * per-pid dirs would otherwise accumulate. */
+  private def processScratch(prefix: String, dir: String): String = {
+    val tag = java.lang.Long.toHexString(
+      java.util.UUID.nameUUIDFromBytes(dir.getBytes).getMostSignificantBits)
+    val pid = ProcessHandle.current().pid()
+    val scratch = sys.props("java.io.tmpdir") + s"/$prefix-$tag-$pid"
+    registerCleanup(scratch)
+    scratch
+  }
+
   /** Determinism rule for query OUTPUT schemas: no raw decimal columns.
     * Decimals are exact inside the plan (partial sums, staging casts) but
     * Spark and DuckDB hash their parquet representation differently, so
@@ -1740,16 +1753,10 @@ object SparkEntry {
     * executor cache. */
   def qCorpusClean(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.CorpusPipeline
-    // checkpoint path is unique per (process, input dir): concurrent
-    // graft processes (a Verify while a Bench scale run is up) must not
-    // clobber or cross-read each other's survivor sets. NB: choosing the
-    // materializeDir path makes query CONSTRUCTION run the upstream
-    // write job — Explain on this query audits only the downstream plan.
-    val tag = java.lang.Long.toHexString(
-      java.util.UUID.nameUUIDFromBytes(dir.getBytes).getMostSignificantBits)
-    val pid = ProcessHandle.current().pid()
-    val checkpointDir = sys.props("java.io.tmpdir") + s"/graft-corpus-clean-$tag-$pid"
-    registerCleanup(checkpointDir) // per-pid dirs would otherwise accumulate
+    // NB: choosing the materializeDir path makes query CONSTRUCTION run
+    // the upstream write job — Explain on this query audits only the
+    // downstream plan.
+    val checkpointDir = processScratch("graft-corpus-clean", dir)
     val (cleaned, _) = CorpusPipeline.clean(t(spark, dir, "documents"),
       minQuality = 0.3, minTokens = 10, nearThreshold = 0.9,
       materializeDir = Some(checkpointDir))
@@ -2592,7 +2599,7 @@ object SparkEntry {
         r => BankMarts.fLoanContract(r("stg_loans"), r("dim_customer"),
           r("dim_product"), r("dim_dealer"), r("dim_date"))))
     val result = Runner.run(spark, Map("raw_loans" -> raw), models,
-      sys.props("java.io.tmpdir") + "/graft-wh")
+      processScratch("graft-wh", dir))
     result("f_loan_contract").select(
       col("loan_id"), col("customer_key"), col("product_key"), col("dealer_key"),
       col("origination_date_key"),

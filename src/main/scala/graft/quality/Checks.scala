@@ -88,14 +88,6 @@ final case class CheckResult(model: String, check: String, violations: Long) {
 }
 
 object Checks {
-  /** Run a suite like `dbt test`: every check against its model, all
-    * results collected (no fail-fast), overall pass = no violations. */
-  def run(suite: Seq[(String, DataFrame, Seq[QualityCheck])]): Seq[CheckResult] =
-    for {
-      (model, df, checks) <- suite
-      check <- checks
-    } yield CheckResult(model, check.name, check.violations(df))
-
   /** The whole suite as ONE DataFrame — (model, check_name, violations,
     * passed), one row per check — so `dbt test` output is itself a
     * queryable, oracle-checkable result set. Counts stay distributed
