@@ -1324,24 +1324,17 @@ object SparkEntry {
       // renames, small trailing stages) back-fills the others' idle
       // cores instead of serializing four bring-ups. Results are
       // unchanged: every init commits its own store atomically, and
-      // nothing below runs until all four are committed.
-      locally {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        try Await.result(Future.sequence(Seq(
-          Future(MinhashIndexStore.init(corpus, cfg.minhashDir, "doc_id",
-            "text", shingleK = 5, numBands = 24, rowsPerBand = 2)),
-          Future(SemanticIndexStore.init(corpus, cfg.semanticDir, "doc_id",
-            "embedding", nlist = 4)),
-          Future(IvfIndexStore.init(corpus, cfg.ivfDir, "doc_id",
-            "embedding", nlist = 8)),
-          Future(TriadPipeline.initLinkageStore(spark, cfg)))),
-          Duration.Inf): Unit
-        finally pool.shutdown()
-      }
+      // nothing below runs until all four are committed. Every init
+      // runs to the end before a failure propagates, so none is still
+      // writing when the `finally` below deletes `root`.
+      graft.ops.VersionedState.writeConcurrently(Seq(
+        () => MinhashIndexStore.init(corpus, cfg.minhashDir, "doc_id",
+          "text", shingleK = 5, numBands = 24, rowsPerBand = 2),
+        () => SemanticIndexStore.init(corpus, cfg.semanticDir, "doc_id",
+          "embedding", nlist = 4),
+        () => IvfIndexStore.init(corpus, cfg.ivfDir, "doc_id",
+          "embedding", nlist = 8),
+        () => TriadPipeline.initLinkageStore(spark, cfg)))
       Seq(0L, 1L).foreach { b =>
         val o = TriadPipeline.processBatch(
           docs.where(col("doc_id") % 5 === 0 &&

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** The shared versioned-snapshot commit protocol behind every
-  * [[VersionedStore]] and the accepted sinks' archive chains — one
+  * [[VersionedStore]] — the four index stores and the accepted sinks'
+  * archive chains ([[graft.streaming.AcceptedSink]]) — one
   * implementation of the rules every persisted incremental state here
   * follows (the [[graft.streaming.CdcStream]] rules):
   *
@@ -170,9 +171,12 @@ private[graft] object VersionedState {
     * rename publishes all-or-nothing, so ordering between them is
     * immaterial. A task whose output another write DOES consume (the
     * minhash bands table derives from the just-written index bytes)
-    * stays sequential INSIDE its task. Blocks until every task
-    * finishes; every task runs to completion (no half-cancelled write
-    * can outlive the attempt) and the first failure propagates. */
+    * stays sequential INSIDE its task. The same overlap serves other
+    * independent units: two pipeline stages, four store inits. Blocks
+    * until every task finishes — every task runs to completion, so no
+    * half-cancelled write can outlive the attempt — then rethrows the
+    * failure of the earliest failed task in LIST order, not the first
+    * to fail in time. */
   def writeConcurrently(tasks: Seq[() => Unit]): Unit =
     if (tasks.sizeIs <= 1) tasks.foreach(_.apply())
     else {
@@ -222,12 +226,29 @@ private[graft] object VersionedState {
 
   private val metaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[Any])]()
-  private val MetaMemoBound = 8192
+  private val MemoBound = 8192
 
-  private def metaSig(fs: FileSystem, metaDir: Path): String =
-    fs.listStatus(metaDir).map(s =>
+  /** `memo`'s value at `key` when it was computed against `dir`'s
+    * current file-listing signature (names + lengths + mtimes, one
+    * `listStatus`); otherwise `compute(fs, dir)`, stored under the new
+    * signature. Each memo is cleared when it reaches [[MemoBound]]. */
+  private def memoized[V](
+      memo: java.util.concurrent.ConcurrentHashMap[String, (String, V)],
+      key: String, spark: SparkSession, dir: String)
+      (compute: (FileSystem, Path) => V): V = {
+    val (fs, p) = fsPath(spark, dir)
+    val sig = fs.listStatus(p).map(s =>
       s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString(",")
+    Option(memo.get(key)) match {
+      case Some((oldSig, v)) if oldSig == sig => v
+      case _ =>
+        val v = compute(fs, p)
+        if (memo.size() >= MemoBound) memo.clear()
+        memo.put(key, (sig, v))
+        v
+    }
+  }
 
   /** The values of version `v`'s one-row meta frame in `cols` order,
     * memoized per (dir, v) against the meta directory's listing
@@ -246,18 +267,8 @@ private[graft] object VersionedState {
     * round-trip every meta shape through this path. */
   def cachedMetaRow(spark: SparkSession, dir: String, v: Long,
                     cols: Seq[String], what: String): Seq[Any] = {
-    val (fs, _) = fsPath(spark, dir)
-    val metaDir = new Path(s"$dir/v=$v/meta")
-    val sig = metaSig(fs, metaDir)
-    val key = s"$dir/v=$v/meta"
-    Option(metaMemo.get(key)) match {
-      case Some((oldSig, row)) if oldSig == sig => row
-      case _ =>
-        val row = readOneRowParquet(fs, metaDir, cols, what)
-        if (metaMemo.size() >= MetaMemoBound) metaMemo.clear()
-        metaMemo.put(key, (sig, row))
-        row
-    }
+    val metaDir = s"$dir/v=$v/meta"
+    memoized(metaMemo, metaDir, spark, metaDir)(readOneRowParquet(_, _, cols, what))
   }
 
   /** Decode the single row of a one-row parquet directory on the
@@ -334,18 +345,8 @@ private[graft] object VersionedState {
   /** The parquet schema under `path`, memoized against the directory's
     * file-listing signature. */
   def cachedParquetSchema(spark: SparkSession,
-                          path: String): org.apache.spark.sql.types.StructType = {
-    val (fs, p) = fsPath(spark, path)
-    val sig = metaSig(fs, p)
-    Option(schemaMemo.get(path)) match {
-      case Some((oldSig, s)) if oldSig == sig => s
-      case _ =>
-        val s = spark.read.parquet(path).schema
-        if (schemaMemo.size() >= MetaMemoBound) schemaMemo.clear()
-        schemaMemo.put(path, (sig, s))
-        s
-    }
-  }
+                          path: String): org.apache.spark.sql.types.StructType =
+    memoized(schemaMemo, path, spark, path)((_, _) => spark.read.parquet(path).schema)
 
   // ---- per-version-directory FRAME memo --------------------------------
   //
@@ -365,19 +366,9 @@ private[graft] object VersionedState {
 
   /** A parquet frame over the protocol-immutable `path`, memoized
     * against the directory's file-listing signature. */
-  def cachedVersionFrame(spark: SparkSession, path: String): DataFrame = {
-    val (fs, p) = fsPath(spark, path)
-    val sig = metaSig(fs, p)
-    val key = s"${System.identityHashCode(spark)}:$path"
-    Option(frameMemo.get(key)) match {
-      case Some((oldSig, df)) if oldSig == sig => df
-      case _ =>
-        val df = spark.read.parquet(path)
-        if (frameMemo.size() >= MetaMemoBound) frameMemo.clear()
-        frameMemo.put(key, (sig, df))
-        df
-    }
-  }
+  def cachedVersionFrame(spark: SparkSession, path: String): DataFrame =
+    memoized(frameMemo, s"${System.identityHashCode(spark)}:$path", spark, path)(
+      (_, _) => spark.read.parquet(path))
 
   /** The version chain serving `v`, newest first: `v` and the delta
     * versions below it down to (and including) the nearest FULL
@@ -407,28 +398,6 @@ private[graft] object VersionedState {
       s"$what at $dir: no full version at or below v=$v — v=0 is always " +
         "full, so the chain base was deleted outside the protocol")
     links.toSeq
-  }
-
-  /** [[prune]] with the delta-chain clamp: delete versions strictly
-    * below `keepFrom`'s chain BASE (the newest full version at or
-    * below it). Deltas make the naive "delete < keepFrom" unsafe — a
-    * surviving version's chain may dip below the floor — so the floor
-    * clamps to the chain base and can never orphan a link; space
-    * reclamation advances as scheduled compactions introduce newer
-    * full versions. Never prunes the latest committed version. Returns
-    * the pruned version numbers. */
-  def pruneToChainBase(spark: SparkSession, dir: String, keepFrom: Long,
-                       subframes: Seq[String], what: String)
-                      (isFull: Long => Boolean): Seq[Long] = {
-    val head = latestVersion(spark, dir, subframes).getOrElse(
-      throw new IllegalArgumentException(
-        s"$what at $dir has no committed version — nothing to prune from"))
-    require(keepFrom <= head,
-      s"$what at $dir: prune keepFrom=v=$keepFrom is above the latest " +
-        s"committed version v=$head — refusing to prune the head")
-    prune(spark, dir,
-      chain(spark, dir, keepFrom, subframes, what)(isFull).min,
-      subframes, what)
   }
 
   /** The `cells` subframe serving a version chain — the union of the
@@ -461,13 +430,21 @@ private[graft] object VersionedState {
   private val ScratchRe = "\\.(?:tmp|debris)-v=(\\d+)-.*".r
   private val DebrisRe = "\\.debris-v=(\\d+)-.*".r
 
-  /** Delete all committed versions strictly below `keepFrom`, plus any
-    * uncommitted version directories below it (crash debris of
+  /** Delete versions strictly below `keepFrom`'s chain BASE (the newest
+    * full version at or below it, where `isFull(w)` reads the store's
+    * full bit). Deltas make the naive "delete < keepFrom" unsafe — a
+    * surviving version's chain may dip below the floor — so the floor
+    * clamps to the chain base and can never orphan a link; space
+    * reclamation advances as scheduled compactions introduce newer
+    * full versions.
+    *
+    * Below that floor it deletes every committed version, any
+    * uncommitted version directories (crash debris of
     * long-dead maintainers) and any scratch or aside directories
     * (`.tmp-v=N-<nonce>`, a maintainer hard-killed mid-write;
     * `.debris-v=N-<nonce>`, a maintainer hard-killed mid-[[clearDebris]])
-    * whose target version sits below it — a scratch for a below-floor
-    * version can never commit anything a reader is allowed to see, and
+    * whose target version sits below the floor — a scratch for a
+    * below-floor version can never commit anything a reader is allowed to see, and
     * without this sweep a crashed compact's corpus-mass scratch would
     * leak forever. A scratch AT or ABOVE the floor is left alone: it
     * may belong to a live maintainer. REFUSES to prune the latest
@@ -475,20 +452,22 @@ private[graft] object VersionedState {
     * retention rule is the caller's job (retain ≥ max job runtime);
     * this method only enforces that the head always survives. Returns
     * the pruned version numbers. */
-  def prune(spark: SparkSession, dir: String, keepFrom: Long,
-            subframes: Seq[String], what: String): Seq[Long] = {
+  def pruneToChainBase(spark: SparkSession, dir: String, keepFrom: Long,
+                       subframes: Seq[String], what: String)
+                      (isFull: Long => Boolean): Seq[Long] = {
     val (fs, path) = fsPath(spark, dir)
-    val latest = latestVersion(spark, dir, subframes).getOrElse(
+    val head = latestVersion(spark, dir, subframes).getOrElse(
       throw new IllegalArgumentException(
         s"$what at $dir has no committed version — nothing to prune from"))
-    require(keepFrom <= latest,
+    require(keepFrom <= head,
       s"$what at $dir: prune keepFrom=v=$keepFrom is above the latest " +
-        s"committed version v=$latest — refusing to prune the head")
-    val doomed = versions(fs, path).filter(_ < keepFrom).sorted
+        s"committed version v=$head — refusing to prune the head")
+    val floor = chain(spark, dir, keepFrom, subframes, what)(isFull).min
+    val doomed = versions(fs, path).filter(_ < floor).sorted
     doomed.foreach(v => fs.delete(new Path(s"$dir/v=$v"), true))
     val leftAlone = scala.collection.mutable.ArrayBuffer.empty[String]
     fs.listStatus(path).toSeq.map(_.getPath.getName).foreach {
-      case s @ ScratchRe(v) if v.toLong < keepFrom =>
+      case s @ ScratchRe(v) if v.toLong < floor =>
         fs.delete(new Path(s"$dir/$s"), true)
       case s @ DebrisRe(_) => leftAlone += s
       case _ => ()

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 import org.apache.spark.sql.types._
 
-/** The lifecycle the four versioned stores share ([[MinhashIndexStore]],
-  * [[SemanticIndexStore]], [[IvfIndexStore]], [[LinkageStore]]): each is
+/** The lifecycle the four versioned stores ([[MinhashIndexStore]],
+  * [[SemanticIndexStore]], [[IvfIndexStore]], [[LinkageStore]]) and the
+  * accepted-corpus archive ([[graft.streaming.AcceptedSink]]) share: each is
   * a [[VersionedState]] chain under `dir/v=N` with a fixed subframe list
   * and a one-row `meta` frame whose last column is the `full` chain bit
   * (a full snapshot, or a delta over the previous version). A store
@@ -13,7 +14,9 @@ import org.apache.spark.sql.types._
   * columns and codec, payload writes, the fold [[compact]] runs,
   * tombstone application and probes. This base owns the version
   * bookkeeping every verb shares: head and pin resolution, the memoized
-  * meta, chain walks, the compact head guard, prune and chain length.
+  * meta, chain walks, the compact head guard, prune and chain length,
+  * and the optional per-version tombstone frame's existence walk and
+  * write.
   *
   * `Meta` is a type member rather than a type parameter because each
   * store's meta class is nested in the store object itself, which a
@@ -41,11 +44,12 @@ abstract class VersionedStore(protected val what: String,
     * require, so the write and the requireMetaCols valve can never
     * drift apart. Scalars map to the schema a tuple `toDF` gives them:
     * primitives required, strings optional. */
-  protected def writeMeta(spark: SparkSession, dest: String, meta: Meta,
-                          full: Boolean): Unit = {
+  private[graft] def writeMeta(spark: SparkSession, dest: String, meta: Meta,
+                               full: Boolean): Unit = {
     val values = encodeMeta(meta) :+ full
     val fields = MetaCols.zip(values).map {
       case (c, _: Int) => StructField(c, IntegerType, nullable = false)
+      case (c, _: Long) => StructField(c, LongType, nullable = false)
       case (c, _: Double) => StructField(c, DoubleType, nullable = false)
       case (c, _: Boolean) => StructField(c, BooleanType, nullable = false)
       case (c, _: String) => StructField(c, StringType, nullable = true)
@@ -59,26 +63,26 @@ abstract class VersionedStore(protected val what: String,
   /** Version `v`'s meta and `full` bit, memoized
     * ([[VersionedState.cachedMetaRow]]): chain walks and the verbs
     * re-read this one immutable row constantly. */
-  protected def readMetaRow(spark: SparkSession, dir: String,
-                            v: Long): (Meta, Boolean) = {
+  private[graft] def readMetaRow(spark: SparkSession, dir: String,
+                                 v: Long): (Meta, Boolean) = {
     val s = VersionedState.cachedMetaRow(spark, dir, v, MetaCols,
       s"$what at $dir v=$v")
     val full = s.last.asInstanceOf[Boolean]
     (decodeMeta(s.init, full), full)
   }
 
-  protected def readMeta(spark: SparkSession, dir: String, v: Long): Meta =
+  private[graft] def readMeta(spark: SparkSession, dir: String, v: Long): Meta =
     readMetaRow(spark, dir, v)._1
 
   /** The version chain serving `v` ([[VersionedState.chain]]): `v` and
     * the deltas below it down to the nearest FULL version, newest
     * first. A cut chain fails by name rather than answering from a
     * partial corpus. */
-  protected def chain(spark: SparkSession, dir: String, v: Long): Seq[Long] =
+  private[graft] def chain(spark: SparkSession, dir: String, v: Long): Seq[Long] =
     VersionedState.chain(spark, dir, v, subframes, what)(readMetaRow(spark, dir, _)._2)
 
-  protected def commit(spark: SparkSession, dir: String, v: Long)
-                      (write: String => Unit): Unit =
+  private[graft] def commit(spark: SparkSession, dir: String, v: Long)
+                           (write: String => Unit): Unit =
     VersionedState.commitVersion(spark, dir, v, what, subframes)(write)
 
   /** Refuse to initialize a directory that already holds a COMMITTED
@@ -177,6 +181,23 @@ abstract class VersionedStore(protected val what: String,
   def chainLength(spark: SparkSession, dir: String,
                   version: Option[Long] = None): Int =
     chain(spark, dir, resolve(spark, dir, version)).length
+
+  private[graft] def tombsPath(dir: String, w: Long): String =
+    s"$dir/v=$w/${VersionedState.TombsSubframe}"
+
+  /** The `links` carrying a committed tombs frame — an fs-existence
+    * walk, no Spark job, so the no-removals common case adds zero
+    * query-time cost to a probe. */
+  private[graft] def tombLinks(spark: SparkSession, dir: String,
+                               links: Seq[Long]): Seq[Long] = {
+    val (fs, _) = VersionedState.fsPath(spark, dir)
+    links.filter(w =>
+      fs.exists(new org.apache.hadoop.fs.Path(s"${tombsPath(dir, w)}/_SUCCESS")))
+  }
+
+  private[graft] def writeTombs(tombs: DataFrame, scratch: String): Unit =
+    tombs.coalesce(1).write.mode("overwrite")
+      .parquet(s"$scratch/${VersionedState.TombsSubframe}")
 }
 
 /** A [[VersionedStore]] keyed by document id whose `remove` writes an
@@ -200,19 +221,6 @@ abstract class IdKeyedStore(name: String, subframes: Seq[String],
   def liveTombs(spark: SparkSession, dir: String,
                 version: Option[Long] = None): DataFrame =
     readLiveTombs(spark, dir, chain(spark, dir, resolve(spark, dir, version)))
-
-  private def tombsPath(dir: String, w: Long): String =
-    s"$dir/v=$w/${VersionedState.TombsSubframe}"
-
-  /** The `links` carrying a committed tombs frame — an fs-existence
-    * walk, no Spark job, so the no-removals common case adds zero
-    * query-time cost to a probe. */
-  private def tombLinks(spark: SparkSession, dir: String,
-                        links: Seq[Long]): Seq[Long] = {
-    val (fs, _) = VersionedState.fsPath(spark, dir)
-    links.filter(w =>
-      fs.exists(new org.apache.hadoop.fs.Path(s"${tombsPath(dir, w)}/_SUCCESS")))
-  }
 
   protected def hasLiveTombs(spark: SparkSession, dir: String,
                              links: Seq[Long]): Boolean =
@@ -243,10 +251,6 @@ abstract class IdKeyedStore(name: String, subframes: Seq[String],
     removeIds.select(col(idCol).cast("long").as("tomb_id"))
       .where(col("tomb_id").isNotNull).distinct()
   }
-
-  protected def writeTombs(tombs: DataFrame, scratch: String): Unit =
-    tombs.coalesce(1).write.mode("overwrite")
-      .parquet(s"$scratch/${VersionedState.TombsSubframe}")
 
   /** Honor live tombstones on a probe's OUTPUT pairs (`id_a`, `id_b`)
     * rather than by rewriting grouped frames whose gids are member-list

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{broadcast, col, lit}
 
-import graft.ops.VersionedState
+import graft.ops.{VersionedState, VersionedStore}
 
 /** Lifecycle for the ingest loops' accepted-corpus sink — the missing
   * half of the partition-per-batch layout. The streams write each
@@ -21,9 +21,9 @@ import graft.ops.VersionedState
   * [[fold]] rewrites them into one archive DELTA version and deletes
   * them. The archive lives under `acceptedDir/_archive` — the
   * underscore prefix keeps Spark's parquet reader from mixing it into a
-  * raw directory scan — as a [[VersionedState]] chain (`v=N/data` +
+  * raw directory scan — as a [[VersionedStore]] chain (`v=N/data` +
   * `v=N/meta`), so the fold inherits the stores' commit atomicity,
-  * crash replay, and chain rules instead of inventing a second
+  * crash replay, chain and prune rules instead of inventing a second
   * protocol. Each fold writes O(folded window) bytes into
   * row-mass-bounded files ([[IngestProtocol.boundedFileCount]]);
   * [[compactArchive]] folds the archive chain itself into one full
@@ -65,10 +65,26 @@ import graft.ops.VersionedState
 object AcceptedSink {
 
   private[streaming] val ArchiveName = "_archive"
-  private val Subframes = Seq("data", "meta")
-  private val MetaCols = Seq("max_folded_batch", "full")
   private val BatchDirRe = "batch=(\\d+)".r
   private val StatsSubframe = "stats"
+
+  /** The archive chain under `acceptedDir/_archive`: per version a
+    * `data` frame and a `meta` row whose value is the fold watermark
+    * `max_folded_batch`. The base's compact hook folds the chain with
+    * no stats index; the sink's verb is [[compactArchive]], which also
+    * rewrites a full head carrying clearable tombstones. */
+  private object Archive extends VersionedStore("accepted archive",
+      Seq("data", "meta"), Seq("max_folded_batch")) {
+    type Meta = Long
+    protected def encodeMeta(maxFolded: Long): Seq[Any] = Seq(maxFolded)
+    protected def decodeMeta(values: Seq[Any], full: Boolean): Long =
+      values.head.asInstanceOf[Long]
+    protected def fold(spark: SparkSession, dir: String, head: Long,
+                       maxFolded: Long): Unit = {
+      val links = chain(spark, dir, head)
+      rewriteFull(spark, dir, links, maxFolded, readTombs(spark, dir, links), Nil)
+    }
+  }
 
   private def archiveRoot(acceptedDir: String): String =
     s"$acceptedDir/$ArchiveName"
@@ -81,29 +97,25 @@ object AcceptedSink {
       .collect { case BatchDirRe(b) => b.toLong }
   }
 
-  private def readMetaRow(spark: SparkSession, root: String,
-                          v: Long): (Long, Boolean) = {
-    // memoized ([[VersionedState.cachedMetaRow]]): the fold/read/audit
-    // verbs re-read this one row constantly — each re-read was a
-    // parquet footer decode plus a one-row Spark job. The memo's
-    // listing-signature check keeps [[migrateArchive]]-class rewrites
-    // visible: a superseded version's meta is new bytes, a new sig.
-    val s = VersionedState.cachedMetaRow(spark, root, v, MetaCols,
-      s"accepted archive at $root v=$v")
-    (s(0).asInstanceOf[Long], s(1).asInstanceOf[Boolean])
-  }
+  /** The fold watermark of the chain `links` (head first); None when
+    * no archive exists. */
+  private def watermarkOf(spark: SparkSession, root: String,
+                          links: Seq[Long]): Option[Long] =
+    links.headOption.map(Archive.readMeta(spark, root, _))
 
-  private def chain(spark: SparkSession, root: String, v: Long): Seq[Long] =
-    VersionedState.chain(spark, root, v, Subframes, "accepted archive")(
-      readMetaRow(spark, root, _)._2)
+  /** The archive data of `links`, unioned. */
+  private def archivedData(spark: SparkSession, root: String,
+                           links: Seq[Long]): DataFrame =
+    links.map(w => VersionedState.cachedVersionFrame(spark, s"$root/v=$w/data"))
+      .reduce(_ unionByName _)
 
   /** Whether anything has ever been accepted here — either tier
     * present. An fs listing, no job; the explicit test callers use
     * instead of swallowing [[readAccepted]]'s failure (which could
     * also mean a corrupt archive — a different answer). */
   def hasAccepted(spark: SparkSession, acceptedDir: String): Boolean =
-    VersionedState.latestVersion(spark, archiveRoot(acceptedDir),
-      Subframes).nonEmpty || liveBatches(spark, acceptedDir).nonEmpty
+    Archive.latestVersion(spark, archiveRoot(acceptedDir)).nonEmpty ||
+      liveBatches(spark, acceptedDir).nonEmpty
 
   /** The live (not yet folded) batch directory ids, unsorted — the
     * [[TriadPipeline.audit]] inspection surface. Includes any dead
@@ -118,8 +130,8 @@ object AcceptedSink {
     * this the audit's structural-integrity probe. */
   def archiveChain(spark: SparkSession, acceptedDir: String): Seq[Long] = {
     val root = archiveRoot(acceptedDir)
-    VersionedState.latestVersion(spark, root, Subframes)
-      .map(chain(spark, root, _)).getOrElse(Seq.empty)
+    Archive.latestVersion(spark, root).map(Archive.chain(spark, root, _))
+      .getOrElse(Seq.empty)
   }
 
   /** The standing accepted schema — what every later batch must match —
@@ -141,7 +153,7 @@ object AcceptedSink {
     // ([[VersionedState.cachedParquetSchema]]): this runs on EVERY
     // micro-batch's accept-time policy check, and the footer inference
     // it repeated was pure fixed cost over protocol-immutable bytes
-    VersionedState.latestVersion(spark, root, Subframes)
+    Archive.latestVersion(spark, root)
       .map { h =>
         val s = VersionedState.cachedParquetSchema(spark, s"$root/v=$h/data")
         org.apache.spark.sql.types.StructType(s.filterNot(_.name == "batch"))
@@ -243,15 +255,14 @@ object AcceptedSink {
                               acceptedDir: String): Seq[String] =
     acceptedSchema(spark, acceptedDir).toSeq.flatMap { standing =>
       val root = archiveRoot(acceptedDir)
-      val headOpt = VersionedState.latestVersion(spark, root, Subframes)
-      val links = headOpt.map(chain(spark, root, _)).getOrElse(Seq.empty)
+      val links = archiveChain(spark, acceptedDir)
       val archiveDrift = links.flatMap { w =>
         val s = spark.read.parquet(s"$root/v=$w/data").schema
         describeDrift(standing,
           org.apache.spark.sql.types.StructType(
             s.filterNot(_.name == "batch")), s"archive v=$w")
       }
-      val watermark = headOpt.map(readMetaRow(spark, root, _)._1)
+      val watermark = watermarkOf(spark, root, links)
       val liveDrift = liveBatches(spark, acceptedDir)
         .filter(b => watermark.forall(b > _)).sorted.flatMap { b =>
           describeDrift(standing,
@@ -317,12 +328,12 @@ object AcceptedSink {
                      migrate: DataFrame => DataFrame): MigrationOutcome = {
     import org.apache.spark.sql.functions.{count, lit => flit, sum}
     val root = archiveRoot(acceptedDir)
-    val head = VersionedState.latestVersion(spark, root, Subframes)
+    val head = Archive.latestVersion(spark, root)
       .getOrElse(throw new IllegalStateException(
         s"accepted corpus at $acceptedDir: no archive exists — a " +
           "migration rewrites the archive; fold the live tier first " +
           "(there is nothing to migrate before the first fold)"))
-    val watermark = readMetaRow(spark, root, head)._1
+    val watermark = Archive.readMeta(spark, root, head)
     val liveAbove = liveBatches(spark, acceptedDir)
       .filter(_ > watermark).sorted
     require(liveAbove.isEmpty,
@@ -332,10 +343,9 @@ object AcceptedSink {
         s"watermark $watermark — a migration with a live tier would " +
         "leave two schemas serving one corpus; stop the stream and fold " +
         "first")
-    val links = chain(spark, root, head)
+    val links = Archive.chain(spark, root, head)
     val tombs = readTombs(spark, root, links)
-    val before = links.map(w => VersionedState.cachedVersionFrame(spark, s"$root/v=$w/data"))
-      .reduce(_ unionByName _)
+    val before = archivedData(spark, root, links)
     val after = migrate(before)
     require(after.columns.contains("batch") &&
       comparableType(after.schema("batch").dataType) ==
@@ -343,7 +353,7 @@ object AcceptedSink {
       s"accepted corpus at $acceptedDir: the migration dropped or " +
         "retyped the `batch` column — every as-of pin rides on it; a " +
         "migration must carry it through unchanged")
-    val idName = tombs.map(_.columns.filterNot(_ == "minted_below").head)
+    val idName = tombs.map(tombIdCol)
     idName.foreach { id =>
       require(after.columns.contains(id) &&
         comparableType(after.schema(id).dataType) ==
@@ -387,13 +397,11 @@ object AcceptedSink {
     }
     val rows = was.valuesIterator.map(_._1).sum
     val v = head + 1
-    VersionedState.commitVersion(spark, root, v, "accepted archive",
-      Subframes) { scratch =>
+    Archive.commit(spark, root, v) { scratch =>
       after.coalesce(IngestProtocol.boundedFileCount(rows))
         .write.mode("overwrite").parquet(s"$scratch/data")
-      writeMeta(spark, s"$scratch/meta", watermark, full = true)
-      tombs.foreach(_.coalesce(1).write.mode("overwrite")
-        .parquet(s"$scratch/${VersionedState.TombsSubframe}"))
+      Archive.writeMeta(spark, s"$scratch/meta", watermark, full = true)
+      tombs.foreach(Archive.writeTombs(_, scratch))
       import spark.implicits._
       Seq((head, rows, was.size.toLong,
         before.schema.json, after.schema.json))
@@ -438,9 +446,7 @@ object AcceptedSink {
   def receiptCoherenceFindings(spark: SparkSession,
                                acceptedDir: String): Seq[String] = {
     val root = archiveRoot(acceptedDir)
-    val links = VersionedState.latestVersion(spark, root, Subframes)
-      .map(chain(spark, root, _)).getOrElse(Seq.empty)
-    links.sorted.flatMap { w =>
+    archiveChain(spark, acceptedDir).sorted.flatMap { w =>
       migrationReceipt(spark, acceptedDir, w).flatMap { receipt =>
         val declared = org.apache.spark.sql.types.DataType
           .fromJson(receipt.select("new_schema").head().getString(0))
@@ -460,8 +466,7 @@ object AcceptedSink {
   def maxFoldedBatch(spark: SparkSession,
                      acceptedDir: String): Option[Long] = {
     val root = archiveRoot(acceptedDir)
-    VersionedState.latestVersion(spark, root, Subframes)
-      .map(readMetaRow(spark, root, _)._1)
+    Archive.latestVersion(spark, root).map(Archive.readMeta(spark, root, _))
   }
 
   /** Tombstone REMOVAL from the accepted corpus — the data-product half
@@ -501,7 +506,7 @@ object AcceptedSink {
         s"'$idCol' (has: ${removeIds.columns.mkString(", ")})")
     val tombs = removeIds.select(col(idCol).cast("long").as(idCol))
       .where(col(idCol).isNotNull).distinct()
-    val head = VersionedState.latestVersion(spark, root, Subframes)
+    val head = Archive.latestVersion(spark, root)
     val live = liveBatches(spark, acceptedDir)
     require(head.nonEmpty || live.nonEmpty,
       s"accepted corpus at $acceptedDir: nothing has been accepted here " +
@@ -509,16 +514,15 @@ object AcceptedSink {
     // an empty removal frame is a no-op, not an archive version
     if (tombs.isEmpty) return head.getOrElse(-1L)
     head.foreach { h =>
-      val existing = readTombs(spark, root, chain(spark, root, h))
-      existing.foreach { t =>
-        val existingId = t.columns.filterNot(_ == "minted_below").head
+      readTombs(spark, root, Archive.chain(spark, root, h)).foreach { t =>
+        val existingId = tombIdCol(t)
         require(existingId == idCol,
           s"accepted corpus at $acceptedDir: standing tombstones use id " +
             s"column '$existingId' but this removal names '$idCol' — one " +
             "sink has one id column")
       }
     }
-    val watermark = head.map(readMetaRow(spark, root, _)._1)
+    val watermark = head.map(Archive.readMeta(spark, root, _))
     val mintedBelow = live.maxOption.map(_ + 1)
       .orElse(watermark.map(_ + 1)).getOrElse(0L)
     val v = head.map(_ + 1).getOrElse(0L)
@@ -535,14 +539,12 @@ object AcceptedSink {
       s"accepted corpus at $acceptedDir: the accepted data has no column " +
         s"'$idCol' (has: ${emptyData.columns.mkString(", ")}) — removal " +
         "must name the sink's id column")
-    VersionedState.commitVersion(spark, root, v, "accepted archive",
-      Subframes) { scratch =>
+    Archive.commit(spark, root, v) { scratch =>
       emptyData.write.mode("overwrite").parquet(s"$scratch/data")
-      writeMeta(spark, s"$scratch/meta", watermark.getOrElse(-1L),
+      Archive.writeMeta(spark, s"$scratch/meta", watermark.getOrElse(-1L),
         full = head.isEmpty)
-      tombs.withColumn("minted_below", lit(mintedBelow))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$scratch/${VersionedState.TombsSubframe}")
+      Archive.writeTombs(tombs.withColumn("minted_below", lit(mintedBelow)),
+        scratch)
     }
     v
   }
@@ -552,31 +554,30 @@ object AcceptedSink {
     * differs from the stores', hence the local reader). */
   private def readTombs(spark: SparkSession, root: String,
                         links: Seq[Long]): Option[DataFrame] = {
-    val (fs, _) = VersionedState.fsPath(spark, root)
-    val present = links.filter(w => fs.exists(new org.apache.hadoop.fs.Path(
-      s"$root/v=$w/${VersionedState.TombsSubframe}/_SUCCESS")))
+    val present = Archive.tombLinks(spark, root, links)
     if (present.isEmpty) None
     else Some(present.map(w =>
-      VersionedState.cachedVersionFrame(spark, s"$root/v=$w/${VersionedState.TombsSubframe}"))
+      VersionedState.cachedVersionFrame(spark, Archive.tombsPath(root, w)))
       .reduce(_ unionByName _))
   }
 
+  /** The id column a tombs frame carries: the remover's name for it. */
+  private def tombIdCol(tombs: DataFrame): String =
+    tombs.columns.filterNot(_ == "minted_below").head
+
+  /** `df` minus the ids `tombs` withdraws — one broadcast anti-join, or
+    * `df` itself when there are no tombstones. */
+  private def minusTombs(df: DataFrame, tombs: Option[DataFrame]): DataFrame =
+    tombs.fold(df) { t =>
+      val id = tombIdCol(t)
+      df.join(broadcast(t.select(id)), Seq(id), "left_anti")
+    }
+
   /** The live (not-yet-cleared) tombstoned ids, `(idCol, minted_below)`
     * — empty when the sink carries no removals or no archive exists. */
-  def liveTombs(spark: SparkSession, acceptedDir: String): Option[DataFrame] = {
-    val root = archiveRoot(acceptedDir)
-    VersionedState.latestVersion(spark, root, Subframes)
-      .flatMap(h => readTombs(spark, root, chain(spark, root, h)))
-  }
+  def liveTombs(spark: SparkSession, acceptedDir: String): Option[DataFrame] =
+    readTombs(spark, archiveRoot(acceptedDir), archiveChain(spark, acceptedDir))
 
-  /** Fold every replay-dead live batch directory (id above the current
-    * watermark, strictly below `belowBatch`) into one new archive delta
-    * version, then delete the folded directories — O(folded window)
-    * read+write, row-mass-bounded output files. Directories at or below
-    * the watermark are deleted WITHOUT reading (dead debris of a fold
-    * that crashed between its commit and its deletes). Returns the new
-    * watermark, or None when nothing was foldable (including a replay
-    * of the batch that already folded). */
   /** Write the optional per-version `stats` subframe — a
     * [[graft.sources.StatsIndex]] file-level min/max/null index over
     * the data files just written into `scratch/data`, built from their
@@ -604,13 +605,17 @@ object AcceptedSink {
         .parquet(s"$scratch/$StatsSubframe")
     }
 
-  def fold(spark: SparkSession, acceptedDir: String,
-           belowBatch: Long): Option[Long] =
-    fold(spark, acceptedDir, belowBatch, Nil)
-
-  /** [[fold]] that also maintains the data-skipping index: when
-    * `statsCols` is non-empty the new archive version carries a `stats`
-    * subframe over its data files ([[writeStats]]), so selective
+  /** Fold every replay-dead live batch directory (id above the current
+    * watermark, strictly below `belowBatch`) into one new archive delta
+    * version, then delete the folded directories — O(folded window)
+    * read+write, row-mass-bounded output files. Directories at or below
+    * the watermark are deleted WITHOUT reading (dead debris of a fold
+    * that crashed between its commit and its deletes). Returns the new
+    * watermark, or None when nothing was foldable (including a replay
+    * of the batch that already folded).
+    *
+    * When `statsCols` is non-empty the new archive version also carries
+    * a `stats` subframe over its data files ([[writeStats]]), so selective
     * downstream reads ([[prunedReadAccepted]]) skip whole files of the
     * accepted corpus — include `batch` in `statsCols` to make as-of
     * reads ([[readAcceptedAsOf]]) skip too (each fold's files span one
@@ -622,10 +627,11 @@ object AcceptedSink {
     * without being one — pruning stays sound, the bounds just
     * over-approximate). The build fails by name on anything else. */
   def fold(spark: SparkSession, acceptedDir: String, belowBatch: Long,
-           statsCols: Seq[String]): Option[Long] = {
+           statsCols: Seq[String] = Nil): Option[Long] = {
     val root = archiveRoot(acceptedDir)
     val (fs, _) = VersionedState.fsPath(spark, acceptedDir)
-    val watermark = maxFoldedBatch(spark, acceptedDir)
+    val head = Archive.latestVersion(spark, root)
+    val watermark = head.map(Archive.readMeta(spark, root, _))
     val live = liveBatches(spark, acceptedDir)
     watermark.foreach { w =>
       live.filter(_ <= w).foreach(b => fs.delete(
@@ -644,10 +650,7 @@ object AcceptedSink {
           .withColumn("batch", lit(b))
       }.reduce(_ unionByName _)
       val rows = data.count()
-      val head = VersionedState.latestVersion(spark, root, Subframes)
-      val v = head.map(_ + 1).getOrElse(0L)
-      VersionedState.commitVersion(spark, root, v, "accepted archive",
-        Subframes) { scratch =>
+      Archive.commit(spark, root, head.map(_ + 1).getOrElse(0L)) { scratch =>
         // data→stats stays sequential INSIDE its task (the stats index
         // derives from the just-written files' footers); the tiny meta
         // write overlaps it ([[VersionedState.writeConcurrently]])
@@ -661,19 +664,13 @@ object AcceptedSink {
               .write.mode("overwrite").parquet(s"$scratch/data")
             writeStats(spark, scratch, statsCols)
           },
-          () => writeMeta(spark, s"$scratch/meta", newMax, full = head.isEmpty)))
+          () => Archive.writeMeta(spark, s"$scratch/meta", newMax,
+            full = head.isEmpty)))
       }
       foldable.foreach(b => fs.delete(
         new org.apache.hadoop.fs.Path(s"$acceptedDir/batch=$b"), true))
       Some(newMax)
     }
-  }
-
-  private def writeMeta(spark: SparkSession, dest: String, maxFolded: Long,
-                        full: Boolean): Unit = {
-    import spark.implicits._
-    Seq((maxFolded, full)).toDF(MetaCols: _*)
-      .coalesce(1).write.mode("overwrite").parquet(dest)
   }
 
   /** Fold the archive's delta chain into one FULL version — the deeper
@@ -688,60 +685,53 @@ object AcceptedSink {
     * forward into the new full version because a live batch directory
     * may still hold their rows. No-op (returns the head) when the head
     * is already full AND carries no clearable tombstones; None when no
-    * archive exists yet. */
-  def compactArchive(spark: SparkSession,
-                     acceptedDir: String): Option[Long] =
-    compactArchive(spark, acceptedDir, Nil)
-
-  /** [[compactArchive]] that writes the new full version with a
-    * data-skipping `stats` subframe (the [[fold]] overload's story; the
-    * compact is where a chain of per-fold indexes collapses into one
-    * corpus-wide index). */
+    * archive exists yet. A non-empty `statsCols` writes the new full
+    * version with a data-skipping `stats` subframe (the [[fold]]
+    * story; the compact is where a chain of per-fold indexes collapses
+    * into one corpus-wide index). */
   def compactArchive(spark: SparkSession, acceptedDir: String,
-                     statsCols: Seq[String]): Option[Long] = {
+                     statsCols: Seq[String] = Nil): Option[Long] = {
     val root = archiveRoot(acceptedDir)
-    VersionedState.latestVersion(spark, root, Subframes).map { head =>
-      val (maxFolded, full) = readMetaRow(spark, root, head)
-      val links = chain(spark, root, head)
+    Archive.latestVersion(spark, root).map { head =>
+      val (maxFolded, full) = Archive.readMetaRow(spark, root, head)
+      val links = Archive.chain(spark, root, head)
       val tombs = readTombs(spark, root, links)
       val clearable = tombs.exists(t =>
         !t.where(col("minted_below") - 1 <= maxFolded).isEmpty)
       if (full && !clearable) head
       else {
-        val raw = links.map(w => VersionedState.cachedVersionFrame(spark, s"$root/v=$w/data"))
-          .reduce(_ unionByName _)
-        val data = tombs match {
-          case Some(t) =>
-            val idName = t.columns.filterNot(_ == "minted_below").head
-            raw.join(
-              org.apache.spark.sql.functions.broadcast(t.select(idName)),
-              Seq(idName), "left_anti")
-          case None => raw
-        }
-        val rows = data.count()
-        VersionedState.commitVersion(spark, root, head + 1,
-          "accepted archive", Subframes) { scratch =>
-          // data→stats sequential inside its task; meta and the
-          // tombstone carry-forward overlap it
-          // ([[VersionedState.writeConcurrently]])
-          VersionedState.writeConcurrently(Seq(
-            () => {
-              data.coalesce(IngestProtocol.boundedFileCount(rows))
-                .write.mode("overwrite").parquet(s"$scratch/data")
-              writeStats(spark, scratch, statsCols)
-            },
-            () => writeMeta(spark, s"$scratch/meta", maxFolded, full = true),
-            // carry forward only the tombstones some live directory may
-            // still answer for; the cleared ones' rows just left the
-            // folded bytes above, and future directories can never carry
-            // a never-redelivered id
-            () => tombs.map(_.where(col("minted_below") - 1 > maxFolded))
-              .filter(!_.isEmpty)
-              .foreach(_.coalesce(1).write.mode("overwrite")
-                .parquet(s"$scratch/${VersionedState.TombsSubframe}"))))
-        }
+        rewriteFull(spark, root, links, maxFolded, tombs, statsCols)
         head + 1
       }
+    }
+  }
+
+  /** Commit the chain `links` (head first) as one FULL version above
+    * its head: `tombs` applied to the data, the clearable ones dropped
+    * and the rest carried forward. */
+  private def rewriteFull(spark: SparkSession, root: String, links: Seq[Long],
+                          maxFolded: Long, tombs: Option[DataFrame],
+                          statsCols: Seq[String]): Unit = {
+    val data = minusTombs(archivedData(spark, root, links), tombs)
+    val rows = data.count()
+    Archive.commit(spark, root, links.head + 1) { scratch =>
+      // data→stats sequential inside its task; meta and the
+      // tombstone carry-forward overlap it
+      // ([[VersionedState.writeConcurrently]])
+      VersionedState.writeConcurrently(Seq(
+        () => {
+          data.coalesce(IngestProtocol.boundedFileCount(rows))
+            .write.mode("overwrite").parquet(s"$scratch/data")
+          writeStats(spark, scratch, statsCols)
+        },
+        () => Archive.writeMeta(spark, s"$scratch/meta", maxFolded, full = true),
+        // carry forward only the tombstones some live directory may
+        // still answer for; the cleared ones' rows just left the
+        // folded bytes above, and future directories can never carry
+        // a never-redelivered id
+        () => tombs.map(_.where(col("minted_below") - 1 > maxFolded))
+          .filter(!_.isEmpty)
+          .foreach(Archive.writeTombs(_, scratch))))
     }
   }
 
@@ -749,9 +739,7 @@ object AcceptedSink {
     * stores' prune, applied to the archive chain. */
   def prune(spark: SparkSession, acceptedDir: String,
             keepFrom: Long): Seq[Long] =
-    VersionedState.pruneToChainBase(spark, archiveRoot(acceptedDir),
-      keepFrom, Subframes, "accepted archive")(
-      readMetaRow(spark, archiveRoot(acceptedDir), _)._2)
+    Archive.prune(spark, archiveRoot(acceptedDir), keepFrom)
 
   /** The whole accepted corpus — archive chain plus live batch
     * directories above the watermark, MINUS live-tombstoned ids
@@ -763,14 +751,18 @@ object AcceptedSink {
     * Fails by name on a directory with neither tier (an empty union has
     * no schema to offer). */
   def readAccepted(spark: SparkSession, acceptedDir: String): DataFrame = {
+    val links = archiveChain(spark, acceptedDir)
+    minusTombs(bothTiers(spark, acceptedDir, links),
+      readTombs(spark, archiveRoot(acceptedDir), links))
+  }
+
+  /** The archive data of the chain `links` unioned with the live batch
+    * directories above its watermark, tombstones not applied. */
+  private def bothTiers(spark: SparkSession, acceptedDir: String,
+                        links: Seq[Long]): DataFrame = {
     val root = archiveRoot(acceptedDir)
-    val headOpt = VersionedState.latestVersion(spark, root, Subframes)
-    val linksOpt = headOpt.map(chain(spark, root, _))
-    val archived = headOpt.map { head =>
-      (linksOpt.get.map(w => VersionedState.cachedVersionFrame(spark, s"$root/v=$w/data"))
-        .reduce(_ unionByName _), readMetaRow(spark, root, head)._1)
-    }
-    val watermark = archived.map(_._2)
+    val archived = Option.when(links.nonEmpty)(archivedData(spark, root, links))
+    val watermark = watermarkOf(spark, root, links)
     val liveDirs = liveBatches(spark, acceptedDir)
       .filter(b => watermark.forall(b > _))
     val live =
@@ -778,22 +770,11 @@ object AcceptedSink {
       else Some(spark.read.parquet(acceptedDir)
         .where(watermark.map(w => col("batch") > w).getOrElse(lit(true)))
         .withColumn("batch", col("batch").cast("long")))
-    val both = (archived.map(_._1), live) match {
-      case (Some(a), Some(l)) => a.unionByName(l)
-      case (Some(a), None) => a
-      case (None, Some(l)) => l
-      case (None, None) => throw new IllegalArgumentException(
+    (archived ++ live).reduceOption(_ unionByName _).getOrElse(
+      throw new IllegalArgumentException(
         s"accepted corpus at $acceptedDir: no archive and no live batch " +
           "directories — nothing has been accepted here (or the path is " +
-          "wrong)")
-    }
-    linksOpt.flatMap(readTombs(spark, root, _)) match {
-      case Some(t) =>
-        val idName = t.columns.filterNot(_ == "minted_below").head
-        both.join(org.apache.spark.sql.functions.broadcast(t.select(idName)),
-          Seq(idName), "left_anti")
-      case None => both
-    }
+          "wrong)"))
   }
 
   /** The accepted corpus as of the END of batch `asOfBatch` — the
@@ -849,7 +830,7 @@ object AcceptedSink {
       outDir)
     val (n, checksum, maxMinted) = liveTombs(spark, acceptedDir) match {
       case Some(t) =>
-        val idName = t.columns.filterNot(_ == "minted_below").head
+        val idName = tombIdCol(t)
         val r = t.agg(
           org.apache.spark.sql.functions.count(lit(1)),
           org.apache.spark.sql.functions.sum(
@@ -938,8 +919,7 @@ object AcceptedSink {
     import org.apache.hadoop.fs.Path
     val root = archiveRoot(acceptedDir)
     val (fs, _) = VersionedState.fsPath(spark, acceptedDir)
-    val headOpt = VersionedState.latestVersion(spark, root, Subframes)
-    val links = headOpt.map(chain(spark, root, _)).getOrElse(Seq.empty)
+    val links = archiveChain(spark, acceptedDir)
     var kept = 0
     var total = 0
     val parts = scala.collection.mutable.ArrayBuffer
@@ -974,7 +954,7 @@ object AcceptedSink {
         parts += spark.read.parquet(dataDir)
       }
     }
-    val watermark = headOpt.map(readMetaRow(spark, root, _)._1)
+    val watermark = watermarkOf(spark, root, links)
     val liveDirs = liveBatches(spark, acceptedDir)
       .filter(b => watermark.forall(b > _)).sorted
     val liveDataCols = statsCols.filterNot(_ == "batch")
@@ -1004,18 +984,11 @@ object AcceptedSink {
     val both =
       if (parts.isEmpty)
         // everything pruned (or nothing there): schema'd empty through
-        // the plain read surface, which also supplies the
+        // the plain two-tier read, which also supplies the
         // nothing-accepted failure by name
-        readAccepted(spark, acceptedDir).where(lit(false))
+        bothTiers(spark, acceptedDir, links).where(lit(false))
       else parts.reduce(_ unionByName _)
-    val withTombs = headOpt.map(chain(spark, root, _))
-      .flatMap(readTombs(spark, root, _)) match {
-      case Some(t) =>
-        val idName = t.columns.filterNot(_ == "minted_below").head
-        both.join(org.apache.spark.sql.functions.broadcast(t.select(idName)),
-          Seq(idName), "left_anti")
-      case None => both
-    }
-    PrunedAccepted(withTombs.where(rowFilter), kept, total)
+    PrunedAccepted(minusTombs(both, readTombs(spark, root, links))
+      .where(rowFilter), kept, total)
   }
 }

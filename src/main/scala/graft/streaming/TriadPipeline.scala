@@ -157,34 +157,22 @@ object TriadPipeline {
     // point, so first-contact minting cannot race. The linkage stage's
     // values still can never drift from what the sink accepted — same
     // committed-bytes input, per-stage wall still reported.
+    val ivfStage = () => timed(IvfIngestStream.processBatch(survivors2,
+      batchId, cfg.ivfDir, cfg.idCol, cfg.vecCol,
+      cfg.vectorCompactEvery, cfg.checkpointDir, cfg.driftGateMinRows))
     val ((o3, t3), (o4, t4)) = cfg.linkage match {
       case Some(st) =>
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        try {
-          val fIvf = Future(timed(IvfIngestStream.processBatch(survivors2,
-            batchId, cfg.ivfDir, cfg.idCol, cfg.vecCol,
-            cfg.vectorCompactEvery, cfg.checkpointDir, cfg.driftGateMinRows)))
-          val fLink = Future(timed(LinkageIngestStream.processBatch(
-            survivors2, batchId, cfg.linkageDir, st.compactEvery,
-            cfg.checkpointDir)))
-          // await BOTH before propagating either failure: a stage still
-          // mid-commit must never outlive this call (the caller may act
-          // on the failure — retry, teardown — while it writes)
-          val r3 = scala.util.Try(Await.result(fIvf, Duration.Inf))
-          val r4 = scala.util.Try(Await.result(fLink, Duration.Inf))
-          val (o3r, t3r) = r3.get
-          val (o4r, t4r) = r4.get
-          ((o3r, t3r), (Some(o4r): Option[LinkageIngestStream.BatchOutcome], t4r))
-        } finally pool.shutdown()
-      case None =>
-        val (o3r, t3r) = timed(IvfIngestStream.processBatch(survivors2,
-          batchId, cfg.ivfDir, cfg.idCol, cfg.vecCol,
-          cfg.vectorCompactEvery, cfg.checkpointDir, cfg.driftGateMinRows))
-        ((o3r, t3r), (None: Option[LinkageIngestStream.BatchOutcome], 0.0))
+        var ivf: (IvfIngestStream.BatchOutcome, Double) = null
+        var link: (LinkageIngestStream.BatchOutcome, Double) = null
+        // both stages run to the end before either failure propagates: a
+        // stage still mid-commit must never outlive this call (the caller
+        // may act on the failure — retry, teardown — while it writes)
+        graft.ops.VersionedState.writeConcurrently(Seq(
+          () => ivf = ivfStage(),
+          () => link = timed(LinkageIngestStream.processBatch(survivors2,
+            batchId, cfg.linkageDir, st.compactEvery, cfg.checkpointDir))))
+        (ivf, (Some(link._1), link._2))
+      case None => (ivfStage(), (None, 0.0))
     }
     val stageSecs =
       (if (o0.nonEmpty) Map("curation" -> t0) else Map.empty[String, Double]) ++

@@ -236,6 +236,18 @@ class MinhashIndexStoreSpec extends SparkSpec {
     }
   }
 
+  test("writeConcurrently returns after its slowest task and rethrows the list-first failure") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      graft.ops.VersionedState.writeConcurrently(Seq(
+        () => { Thread.sleep(300); throw new IllegalStateException("list-first") },
+        () => throw new IllegalArgumentException("time-first"),
+        () => { Thread.sleep(1000); slowDone.set(true) }))
+    }
+    assert(e.getMessage === "list-first")
+    assert(slowDone.get, "returned while a task was still running")
+  }
+
   test("debris clearing cannot destroy a commit that lands in the race window") {
     // the TOCTOU the delete-in-place protocol had: maintainer A sees
     // uncommitted debris at v=0, and between that observation and A's

@@ -3,10 +3,13 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{IvfIndexStore, LinkageStore, MinhashIndexStore, SemanticIndexStore}
+import graft.sources.StatsIndex
+import graft.streaming.AcceptedSink
 
-/** Persisted-format pins for the four versioned stores. Each store runs
-  * one fixed init → append → remove → compact over small in-memory
-  * frames; for every version written, the spec pins the subframe
+/** Persisted-format pins for the four versioned stores and the accepted
+  * archive. Each store runs one fixed init → append → remove → compact
+  * over small in-memory frames (the archive: fold → remove → fold →
+  * compact → migrate); for every version written, the spec pins the subframe
   * directory names, the meta parquet schema and values, and an
   * order-independent digest of each subframe's rows. A change to any of
   * them changes what an older engine (or a reader of the directories)
@@ -81,8 +84,12 @@ class StoreFormatSpec extends SparkSpec {
       Seq(s"v=$v subframes=${subs.mkString(",")}",
         s"v=$v meta schema=${parquetSchema(new java.io.File(vdir, "meta"))}",
         s"v=$v meta values=${metaRow.head.toSeq.mkString(",")}") ++
-        subs.filter(_ != "meta").map(s =>
-          s"v=$v $s ${digest(spark.read.parquet(s"$dir/v=$v/$s"))}")
+        subs.filter(_ != "meta").map { s =>
+          // stats rows name their data file, whose basename carries a
+          // per-write UUID: everything else in the frame is pinned
+          val frame = spark.read.parquet(s"$dir/v=$v/$s")
+          s"v=$v $s ${digest(if (s == "stats") frame.drop(StatsIndex.FileCol) else frame)}"
+        }
     }
   }
 
@@ -222,6 +229,51 @@ class StoreFormatSpec extends SparkSpec {
         "v=3 meta values=name,blk,1,true",
         "v=3 edges rows=4 digest=70069cde",
         "v=3 labels rows=8 digest=18687368"))
+    }
+  }
+
+  test("accepted archive: fold, remove, fold, compact, migrate pin their persisted format") {
+    withDir { root =>
+      val acc = s"$root/accepted"
+      def batch(b: Long, ids: Seq[Long]): Unit =
+        ids.map(i => (i, s"doc $i", if (i % 2 == 0) "web" else "book"))
+          .toDF("doc_id", "text", "src").coalesce(1).write.parquet(s"$acc/batch=$b")
+      val statsCols = Seq("doc_id", "batch")
+      batch(0L, 1L to 4L)
+      batch(1L, 5L to 7L)
+      assert(AcceptedSink.fold(spark, acc, belowBatch = 2L, statsCols = statsCols) === Some(1L))
+      batch(2L, 8L to 10L)
+      // 3 sits in the archive, 9 in the live batch 2
+      AcceptedSink.remove(spark, acc, Seq(3L, 9L).toDF("doc_id"), "doc_id")
+      assert(AcceptedSink.fold(spark, acc, belowBatch = 3L) === Some(2L))
+      assert(AcceptedSink.compactArchive(spark, acc, statsCols) === Some(3L))
+      AcceptedSink.migrateArchive(spark, acc,
+        _.withColumn("n_chars", length(col("text")).cast("long")))
+      check("accepted archive", s"$acc/_archive", Seq(
+        "v=0 subframes=data,meta,stats",
+        "v=0 meta schema=required int64 max_folded_batch,required boolean full",
+        "v=0 meta values=1,true",
+        "v=0 data rows=7 digest=3afdf059",
+        "v=0 stats rows=1 digest=fb8aa97f",
+        "v=1 subframes=data,meta,tombs",
+        "v=1 meta schema=required int64 max_folded_batch,required boolean full",
+        "v=1 meta values=1,false",
+        "v=1 data rows=0 digest=03f5d279",
+        "v=1 tombs rows=2 digest=4f724f70",
+        "v=2 subframes=data,meta",
+        "v=2 meta schema=required int64 max_folded_batch,required boolean full",
+        "v=2 meta values=2,false",
+        "v=2 data rows=3 digest=9de9df87",
+        "v=3 subframes=data,meta,stats",
+        "v=3 meta schema=required int64 max_folded_batch,required boolean full",
+        "v=3 meta values=2,true",
+        "v=3 data rows=8 digest=a848d093",
+        "v=3 stats rows=1 digest=aef433df",
+        "v=4 subframes=data,meta,migration",
+        "v=4 meta schema=required int64 max_folded_batch,required boolean full",
+        "v=4 meta values=2,true",
+        "v=4 data rows=8 digest=2e46294f",
+        "v=4 migration rows=1 digest=ece9f3d7"))
     }
   }
 }
