@@ -34,12 +34,13 @@ object DwhSmoke {
       .toDF("loan_id", "payment_date", "amount", "principal_amt", "interest_amt",
         "fee_amt", "late_fee_amt", "channel_id")
       .withColumn("payment_date", to_date(col("payment_date")))
-    val tmp = java.nio.file.Files.createTempDirectory("dwh-smoke").toString
-    val result = graft.pipeline.BankDwh.run(spark, loans, payments, tmp)
-    println(s"built=${result.built.size} models: ${result.built.mkString(",")}")
-    result.checks.foreach(c => println(s"check ${c.model}.${c.check}: ${if (c.passed) "PASS" else s"FAIL(${c.violations})"}"))
-    println(s"ALL CHECKS ${if (result.passed) "PASS" else "FAIL"}")
-    result("f_loan_contract").show(truncate = false)
+    Scratch.during("dwh-smoke") { tmp =>
+      val result = graft.pipeline.BankDwh.run(spark, loans, payments, tmp)
+      println(s"built=${result.built.size} models: ${result.built.mkString(",")}")
+      result.checks.foreach(c => println(s"check ${c.model}.${c.check}: ${if (c.passed) "PASS" else s"FAIL(${c.violations})"}"))
+      println(s"ALL CHECKS ${if (result.passed) "PASS" else "FAIL"}")
+      result("f_loan_contract").show(truncate = false)
+    }
     spark.stop()
   }
 }

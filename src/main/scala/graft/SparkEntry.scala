@@ -25,27 +25,32 @@ object SparkEntry {
   /** Exact order-independent money sum: decimal(18,2) partial sums, double out. */
   private def dsum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
 
-  /** Materialize a bounded contract/result frame so it outlives its
-    * gate's scratch store: collected rows re-enter as a LOCAL relation,
-    * not an RDD — `parallelize` sliced every one-row contract into
+  /** Run a lifecycle gate over its own scratch directory. The rule
+    * every gate relies on: its frame is materialized before the
+    * directory is deleted, so the returned frame reads nothing from it.
+    * Collected rows re-enter as a LOCAL relation, not an RDD —
+    * `parallelize` sliced every one-row contract into
     * `defaultParallelism` (32) partitions, so each downstream action
     * scheduled 32 near-empty tasks per gate (measured as a uniform
     * ~0.1–0.3 s tail across the 15 lifecycle gates, r20). A local
-    * relation scans in ONE task; the rows and schema are identical. */
-  private def materialized(spark: SparkSession, df: DataFrame): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(df.collect().toIndexedSeq.asJava, df.schema)
-  }
+    * relation scans in ONE task; the rows and schema are identical.
+    * There is no global `clearCache`: Verify runs queries concurrently,
+    * and a global clear mid-sweep evicts frames other in-flight queries
+    * registered. The gates' caches are scope-released by Verify
+    * (`OpCaches.scoped`) and swept by Bench's own between-query clear. */
+  private def scratchGate(spark: SparkSession, prefix: String)(
+      body: String => DataFrame): DataFrame =
+    Scratch.during(prefix) { d =>
+      import scala.jdk.CollectionConverters._
+      val df = body(d)
+      spark.createDataFrame(df.collect().toIndexedSeq.asJava, df.schema)
+    }
 
   /** Delete a scratch directory at JVM exit (idempotent per path). */
   private val cleanupRegistered = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private def registerCleanup(dir: String): Unit =
     if (cleanupRegistered.add(dir)) sys.addShutdownHook {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(): Unit
-      }
-      rm(new java.io.File(dir))
+      Scratch.deleteTree(new java.io.File(dir))
     }
 
   /** A temp directory unique per (process, input dir), deleted at JVM
@@ -696,8 +701,7 @@ object SparkEntry {
     val docs = t(spark, dir, "documents")
     val corpus = docs.where(col("doc_id") % 5 =!= 0)
     val batch = docs.where(col("doc_id") % 5 === 0)
-    val store = java.nio.file.Files.createTempDirectory("q-minhash-store").toString
-    try {
+    scratchGate(spark, "q-minhash-store") { store =>
       // the store OWNS the builds: init persists the parameters, the
       // append delta is built with the persisted meta
       MinhashIndexStore.init(corpus.where(pmod(col("doc_id"), lit(7)) =!= 1),
@@ -705,13 +709,8 @@ object SparkEntry {
       MinhashIndexStore.append(spark, store,
         corpus.where(pmod(col("doc_id"), lit(7)) === 1),
         "doc_id", "text", expectedBase = 0L)
-      val pairs = MinhashIndexStore.probeLatest(spark, store, batch,
+      MinhashIndexStore.probeLatest(spark, store, batch,
         "doc_id", "text", threshold = 0.5)
-      materialized(spark, pairs)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(store)).deleteRecursively()
-      // no global clearCache — Verify runs queries concurrently
     }
   }
 
@@ -731,20 +730,14 @@ object SparkEntry {
     val docs = t(spark, dir, "documents")
     val corpus = docs.where(col("doc_id") % 5 =!= 0)
     val batch = docs.where(col("doc_id") % 5 === 0)
-    val store = java.nio.file.Files.createTempDirectory("q-minhash-remove").toString
-    try {
+    scratchGate(spark, "q-minhash-remove") { store =>
       MinhashIndexStore.init(corpus, store, "doc_id", "text",
         shingleK = 5, numBands = 24, rowsPerBand = 2)
       MinhashIndexStore.remove(spark, store,
         corpus.where(pmod(col("doc_id"), lit(7)) === 1).select("doc_id"),
         "doc_id", expectedBase = 0L)
-      val pairs = MinhashIndexStore.probeLatest(spark, store, batch,
+      MinhashIndexStore.probeLatest(spark, store, batch,
         "doc_id", "text", threshold = 0.5)
-      materialized(spark, pairs)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(store)).deleteRecursively()
-      // no global clearCache — Verify runs queries concurrently
     }
   }
 
@@ -767,8 +760,7 @@ object SparkEntry {
     import graft.streaming.DedupIngestStream
     val docs = t(spark, dir, "documents")
     val corpus = docs.where(col("doc_id") % 5 =!= 0)
-    val root = java.nio.file.Files.createTempDirectory("q-ingest-loop").toString
-    try {
+    scratchGate(spark, "q-ingest-loop") { root =>
       graft.ops.MinhashIndexStore.init(corpus, s"$root/store",
         "doc_id", "text", shingleK = 5, numBands = 24, rowsPerBand = 2)
       Seq(0L, 1L).foreach { b =>
@@ -780,14 +772,10 @@ object SparkEntry {
       // the corpus read surface (archive tier + live batch dirs) — at
       // this gate's two batches nothing folds, but the gate must read
       // through the same API a production consumer would
-      val accepted = graft.streaming.AcceptedSink
+      graft.streaming.AcceptedSink
         .readAccepted(spark, s"$root/accepted")
         .select(col("doc_id"), col("batch").cast("int").as("batch"))
         .orderBy("doc_id")
-      materialized(spark, accepted)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
     }
   }
 
@@ -808,8 +796,7 @@ object SparkEntry {
     import graft.streaming.AcceptedSink
     import graft.sources.StatsIndex
     val docs = t(spark, dir, "documents").select(col("doc_id"))
-    val root = java.nio.file.Files.createTempDirectory("q-accepted-asof").toString
-    try {
+    scratchGate(spark, "q-accepted-asof") { root =>
       val acc = s"$root/accepted"
       (0L to 2L).foreach { b =>
         docs.where(pmod(col("doc_id"), lit(3)) === b)
@@ -826,13 +813,9 @@ object SparkEntry {
         s"q_accepted_asof: the batch-range read pruned nothing " +
           s"(${asOf.keptFiles}/${asOf.totalFiles} files) — the live tier's " +
           "directory-name stats stopped skipping")
-      val out = asOf.df
+      asOf.df
         .select(col("doc_id"), col("batch").cast("int").as("batch"))
         .orderBy("doc_id")
-      materialized(spark, out)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
     }
   }
 
@@ -847,14 +830,9 @@ object SparkEntry {
     * (the qMinhashStore pattern). */
   def qTrainShards(spark: SparkSession, dir: String): DataFrame = {
     val docs = t(spark, dir, "documents")
-    val root = java.nio.file.Files.createTempDirectory("q-train-shards").toString
-    try {
-      val manifest = graft.ops.Curation.exportShards(docs, "doc_id", 16, root)
+    scratchGate(spark, "q-train-shards") { root =>
+      graft.ops.Curation.exportShards(docs, "doc_id", 16, root)
         .orderBy("shard")
-      materialized(spark, manifest)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
     }
   }
 
@@ -875,8 +853,7 @@ object SparkEntry {
   def qShardsAsof(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.AcceptedSink
     val docs = t(spark, dir, "documents").select(col("doc_id"))
-    val root = java.nio.file.Files.createTempDirectory("q-shards-asof").toString
-    try {
+    scratchGate(spark, "q-shards-asof") { root =>
       val acc = s"$root/accepted"
       (0L to 2L).foreach { b =>
         docs.where(pmod(col("doc_id"), lit(3)) === b)
@@ -888,14 +865,10 @@ object SparkEntry {
       val out = s"$root/export"
       val manifest = AcceptedSink.exportShardsAsOf(spark, acc,
         asOfBatch = 1L, "doc_id", numShards = 8, out)
-      val pinned = manifest.crossJoin(
+      manifest.crossJoin(
         AcceptedSink.shardProvenance(spark, out)
           .select("as_of_batch", "n_tombs", "tombs_checksum"))
         .orderBy("shard")
-      materialized(spark, pinned)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
     }
   }
 
@@ -1114,8 +1087,7 @@ object SparkEntry {
   def qDataSkipping(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.StatsIndex
     val events = t(spark, dir, "events")
-    val scratch = java.nio.file.Files.createTempDirectory("q-data-skipping").toString
-    try {
+    scratchGate(spark, "q-data-skipping") { scratch =>
       graft.ops.Layout.zOrdered(
         events.select("event_id", "user_id", "event_type", "value"),
         Seq("user_id", "value"), bits = 16, numPartitions = 16)
@@ -1129,16 +1101,12 @@ object SparkEntry {
       val rowPred = col("user_id").between(3L, 6L) &&
         col("value").between(20.0, 80.0)
       val scan = StatsIndex.prunedRead(spark, scratch, stats, keep, rowPred)
-      val out = scan.df.agg(
+      scan.df.agg(
           count(lit(1)).as("n_events"),
           dsum(col("value")).as("sum_value"),
           countDistinct(col("user_id")).as("n_users"))
         .withColumn("pruned_files",
           lit(scan.keptFiles > 0 && scan.keptFiles < scan.totalFiles))
-      materialized(spark, out)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(scratch)).deleteRecursively()
     }
   }
 
@@ -1155,8 +1123,7 @@ object SparkEntry {
   def qBloomSkipping(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.StatsIndex
     val events = t(spark, dir, "events")
-    val scratch = java.nio.file.Files.createTempDirectory("q-bloom-skipping").toString
-    try {
+    scratchGate(spark, "q-bloom-skipping") { scratch =>
       graft.ops.Layout.zOrdered(
         events.select("event_id", "user_id", "event_type", "value"),
         Seq("user_id", "value"), bits = 16, numPartitions = 16)
@@ -1169,15 +1136,11 @@ object SparkEntry {
       val scan = StatsIndex.prunedRead(spark, scratch, stats,
         StatsIndex.mayContainId("event_id", ids),
         col("event_id").isin(ids: _*))
-      val out = scan.df.agg(
+      scan.df.agg(
           count(lit(1)).as("n_events"),
           dsum(col("value")).as("sum_value"))
         .withColumn("pruned_files",
           lit(scan.keptFiles > 0 && scan.keptFiles < scan.totalFiles))
-      materialized(spark, out)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(scratch)).deleteRecursively()
     }
   }
 
@@ -1234,17 +1197,12 @@ object SparkEntry {
   def qLinkageIncr(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.LinkageStore
     val part = t(spark, dir, "part").select("p_partkey", "p_brand", "p_name")
-    val store = java.nio.file.Files.createTempDirectory("q-linkage-incr").toString
-    try {
+    scratchGate(spark, "q-linkage-incr") { store =>
       LinkageStore.init(part.where(col("p_partkey") % 5 =!= 0), store,
         "p_name", Seq("p_brand"), maxDist = 4)
       LinkageStore.append(spark, store,
         part.where(col("p_partkey") % 5 === 0), expectedBase = 0L)
-      val out = LinkageStore.resolveRows(spark, store, part)
-      materialized(spark, out)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(store)).deleteRecursively()
+      LinkageStore.resolveRows(spark, store, part)
     }
   }
 
@@ -1265,17 +1223,12 @@ object SparkEntry {
   def qLinkageRemove(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.LinkageStore
     val part = t(spark, dir, "part").select("p_partkey", "p_brand", "p_name")
-    val store = java.nio.file.Files.createTempDirectory("q-linkage-remove").toString
-    try {
+    scratchGate(spark, "q-linkage-remove") { store =>
       LinkageStore.init(part, store, "p_name", Seq("p_brand"), maxDist = 4)
       LinkageStore.remove(spark, store,
         part.where(col("p_name").endsWith("e")).select("p_brand", "p_name"),
         expectedBase = 0L)
-      val out = LinkageStore.resolveRows(spark, store, part)
-      materialized(spark, out)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(store)).deleteRecursively()
+      LinkageStore.resolveRows(spark, store, part)
     }
   }
 
@@ -1312,8 +1265,7 @@ object SparkEntry {
         i => (pmod(xxhash64(col("doc_id"), i, lit(42)), lit(1000003L))
           .cast("double") / 1000003.0 - 0.5).cast("float")))
     val corpus = docs.where(col("doc_id") % 5 =!= 0)
-    val root = java.nio.file.Files.createTempDirectory("q-triad-linkage").toString
-    try {
+    scratchGate(spark, "q-triad-linkage") { root =>
       val cfg = TriadPipeline.Config(root, "doc_id", "text", "embedding",
         checkpointDir = s"$root/cp", semanticThreshold = 0.95,
         linkage = Some(TriadPipeline.LinkageStage("sig", Seq("lang"),
@@ -1326,7 +1278,7 @@ object SparkEntry {
       // unchanged: every init commits its own store atomically, and
       // nothing below runs until all four are committed. Every init
       // runs to the end before a failure propagates, so none is still
-      // writing when the `finally` below deletes `root`.
+      // writing when the scratch `root` is deleted.
       graft.ops.VersionedState.writeConcurrently(Seq(
         () => MinhashIndexStore.init(corpus, cfg.minhashDir, "doc_id",
           "text", shingleK = 5, numBands = 24, rowsPerBand = 2),
@@ -1347,13 +1299,9 @@ object SparkEntry {
       }
       val accepted = AcceptedSink.readAccepted(spark, cfg.semanticAccepted)
         .select("doc_id", "lang", "sig")
-      val out = LinkageStore.resolveRows(spark, cfg.linkageDir, accepted)
+      LinkageStore.resolveRows(spark, cfg.linkageDir, accepted)
         .select(col("doc_id"), col("lang"), col("sig"), col("canonical_sig"))
         .orderBy("doc_id")
-      materialized(spark, out)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
     }
   }
 
@@ -1866,27 +1814,17 @@ object SparkEntry {
     import graft.ops.IvfIndexStore
     val emb = t(spark, dir, "embeddings")
     val q = emb.where(col("vec_id") < 100)
-    val store = java.nio.file.Files.createTempDirectory("q-ivf-store").toString
-    try {
+    scratchGate(spark, "q-ivf-store") { store =>
       IvfIndexStore.init(emb.where(pmod(col("vec_id"), lit(10)) =!= 3),
         store, "vec_id", "embedding", nlist = 16)
       IvfIndexStore.append(spark, store,
         emb.where(pmod(col("vec_id"), lit(10)) === 3),
         "vec_id", "embedding", expectedBase = 0L)
-      val contract = annRecallContract(
+      annRecallContract(
         IvfIndexStore.probeLatest(spark, store, q, "vec_id", "embedding",
           k = 5, nprobe = 8),
         Similarity.bruteForceTopK(emb, q, "vec_id", "embedding", k = 5),
         floor = 0.75)
-      materialized(spark, contract)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(store)).deleteRecursively()
-      // NO global clearCache here: Verify runs queries CONCURRENTLY,
-      // and a global clear mid-sweep evicts frames other in-flight
-      // queries registered. The contract caches this query creates are
-      // scope-released by Verify (OpCaches.scoped) and swept by Bench's
-      // own between-query clear.
     }
   }
 
@@ -1905,8 +1843,7 @@ object SparkEntry {
     val emb = t(spark, dir, "embeddings")
     val q = emb.where(col("vec_id") < 100)
     val removed = pmod(col("vec_id"), lit(9)) === 4 && col("vec_id") >= 100
-    val store = java.nio.file.Files.createTempDirectory("q-ivf-remove").toString
-    try {
+    scratchGate(spark, "q-ivf-remove") { store =>
       IvfIndexStore.init(emb.where(pmod(col("vec_id"), lit(10)) =!= 3),
         store, "vec_id", "embedding", nlist = 16)
       IvfIndexStore.append(spark, store,
@@ -1917,7 +1854,7 @@ object SparkEntry {
       val probe = graft.ops.OpCaches.registered(
         IvfIndexStore.probeLatest(spark, store, q, "vec_id", "embedding",
           k = 5, nprobe = 8))
-      val contract = annRecallContract(probe,
+      annRecallContract(probe,
         Similarity.bruteForceTopK(emb.where(!removed), q,
           "vec_id", "embedding", k = 5),
         floor = 0.75)
@@ -1926,11 +1863,6 @@ object SparkEntry {
           .agg(count(lit(1)).as("_nr")))
         .select(col("n_queries"), col("n_exact"), col("sum_score"),
           col("recall_ok"), (col("_nr") === 0L).as("no_removed"))
-      materialized(spark, contract)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(store)).deleteRecursively()
-      // no global clearCache — Verify runs queries concurrently
     }
   }
 
@@ -1990,6 +1922,21 @@ object SparkEntry {
     Skew.saltedJoin(big, small, "custkey", saltBuckets = 8, saltBy = col("o_orderkey"))
   }
 
+  /** The embeddings as double vectors `v`, unioned with one planted
+    * near-dup per vector at `vec_id + idOffset`: a copy with 5% of the
+    * next coordinate rotated in (see [[qCosineNearDups]]; the +1000001
+    * offset is explained at [[qSemanticIncr]]). */
+  private def plantedEmbeddings(spark: SparkSession, dir: String,
+                                idOffset: Long): DataFrame = {
+    val emb = t(spark, dir, "embeddings")
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+    val planted = emb.select(
+      (col("vec_id") + lit(idOffset)).as("vec_id"),
+      zip_with(col("v"), concat(slice(col("v"), 2, 63), slice(col("v"), 1, 1)),
+        (x, y) => x + lit(0.05) * y).as("v"))
+    emb.unionByName(planted)
+  }
+
   /** Embedding near-dup pairs above cosine 0.9 via LSH buckets. The
     * synthetic corpus has no native near-dups (max pairwise cosine
     * ≈ 0.48), so the query plants one per vector — a copy with 5% of
@@ -2001,16 +1948,9 @@ object SparkEntry {
     * the same left-fold bits). The recall-vs-threshold behaviour for
     * pairs NEAR 0.9 is measured in the spec against a brute-force
     * scan. */
-  def qCosineNearDups(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-    val planted = emb.select(
-      (col("vec_id") + lit(1000000L)).as("vec_id"),
-      zip_with(col("v"), concat(slice(col("v"), 2, 63), slice(col("v"), 1, 1)),
-        (x, y) => x + lit(0.05) * y).as("v"))
-    Similarity.cosineNearDups(emb.unionByName(planted), "vec_id", "v",
-      dim = 64, threshold = 0.9, numTables = 12)
-  }
+  def qCosineNearDups(spark: SparkSession, dir: String): DataFrame =
+    Similarity.cosineNearDups(plantedEmbeddings(spark, dir, 1000000L),
+      "vec_id", "v", dim = 64, threshold = 0.9, numTables = 12)
 
   /** SemDeDup-style semantic dedup over the planted corpus, gated as a
     * pair-recall contract: the cluster-restricted pair set
@@ -2026,13 +1966,7 @@ object SparkEntry {
     * cross-cell miss set) are not bitwise-pinned, while planted pairs
     * co-cluster at any jitter (measured recall 1.0; floor 0.9). */
   def qSemanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-    val planted = emb.select(
-      (col("vec_id") + lit(1000000L)).as("vec_id"),
-      zip_with(col("v"), concat(slice(col("v"), 2, 63), slice(col("v"), 1, 1)),
-        (x, y) => x + lit(0.05) * y).as("v"))
-    val corpus = emb.unionByName(planted)
+    val corpus = plantedEmbeddings(spark, dir, 1000000L)
     val sem = Similarity.semanticNearDups(corpus, "vec_id", "v",
       threshold = 0.9) // nlist derived from distinct mass (512-vector cells)
     val ref = graft.ops.OpCaches.registered(
@@ -2065,13 +1999,7 @@ object SparkEntry {
     * cells, not a retrain, set the boundary-miss geometry) and the
     * sidedness bit (zero emitted pairs that touch no batch id). */
   def qSemanticIncr(spark: SparkSession, dir: String): DataFrame = {
-    val emb = t(spark, dir, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-    val planted = emb.select(
-      (col("vec_id") + lit(1000001L)).as("vec_id"),
-      zip_with(col("v"), concat(slice(col("v"), 2, 63), slice(col("v"), 1, 1)),
-        (x, y) => x + lit(0.05) * y).as("v"))
-    val corpus = emb.unionByName(planted)
+    val corpus = plantedEmbeddings(spark, dir, 1000001L)
     val isNew = col("vec_id") % 5 === 0
     val (centroids, cells) = Similarity.semanticIndexBuild(
       corpus.where(!isNew), "vec_id", "v")
@@ -2115,17 +2043,10 @@ object SparkEntry {
     * is materialized before the scratch store is deleted. */
   def qSemanticStore(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.SemanticIndexStore
-    val emb = t(spark, dir, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-    val planted = emb.select(
-      (col("vec_id") + lit(1000001L)).as("vec_id"),
-      zip_with(col("v"), concat(slice(col("v"), 2, 63), slice(col("v"), 1, 1)),
-        (x, y) => x + lit(0.05) * y).as("v"))
-    val corpus = emb.unionByName(planted)
+    val corpus = plantedEmbeddings(spark, dir, 1000001L)
     val isNew = col("vec_id") % 5 === 0
     val standing = corpus.where(!isNew)
-    val store = java.nio.file.Files.createTempDirectory("q-sem-store").toString
-    try {
+    scratchGate(spark, "q-sem-store") { store =>
       SemanticIndexStore.init(standing.where(pmod(col("vec_id"), lit(7)) =!= 1),
         store, "vec_id", "v")
       SemanticIndexStore.append(spark, store,
@@ -2138,13 +2059,7 @@ object SparkEntry {
         Similarity.cosineNearDups(corpus, "vec_id", "v",
           dim = 64, threshold = 0.9, numTables = 12)
           .where(col("id_a") % 5 === 0 || col("id_b") % 5 === 0))
-      val contract = semanticBatchContract(sem, ref)
-      materialized(spark, contract)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(store)).deleteRecursively()
-      // no global clearCache — Verify sweeps run queries concurrently
-      // (the qIvfStore lesson); scope release owns the cache lifecycle
+      semanticBatchContract(sem, ref)
     }
   }
 
@@ -2160,17 +2075,10 @@ object SparkEntry {
     * clear its floor with a few removed pairs still surfacing). */
   def qSemanticRemove(spark: SparkSession, dir: String): DataFrame = {
     import graft.ops.SemanticIndexStore
-    val emb = t(spark, dir, "embeddings")
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-    val planted = emb.select(
-      (col("vec_id") + lit(1000001L)).as("vec_id"),
-      zip_with(col("v"), concat(slice(col("v"), 2, 63), slice(col("v"), 1, 1)),
-        (x, y) => x + lit(0.05) * y).as("v"))
-    val corpus = emb.unionByName(planted)
+    val corpus = plantedEmbeddings(spark, dir, 1000001L)
     val isNew = col("vec_id") % 5 === 0
     val removed = !isNew && pmod(col("vec_id"), lit(7)) === 2
-    val store = java.nio.file.Files.createTempDirectory("q-sem-remove").toString
-    try {
+    scratchGate(spark, "q-sem-remove") { store =>
       SemanticIndexStore.init(corpus.where(!isNew), store, "vec_id", "v")
       SemanticIndexStore.remove(spark, store,
         corpus.where(removed).select("vec_id"), "vec_id", expectedBase = 0L)
@@ -2184,15 +2092,10 @@ object SparkEntry {
       val removedHits = sem.where(
         (col("id_a") % 5 =!= 0 && pmod(col("id_a"), lit(7)) === 2) ||
           (col("id_b") % 5 =!= 0 && pmod(col("id_b"), lit(7)) === 2))
-      val contract = semanticBatchContract(sem, ref)
+      semanticBatchContract(sem, ref)
         .crossJoin(removedHits.agg(count(lit(1)).as("_nr")))
         .select(col("n_pairs"), col("sum_score"), col("recall_ok"),
           col("sided_ok"), (col("_nr") === 0L).as("removed_absent"))
-      materialized(spark, contract)
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(store)).deleteRecursively()
-      // no global clearCache — Verify runs queries concurrently
     }
   }
 

@@ -36,8 +36,7 @@ object BandedProbeBench {
         docs.where(col("doc_id") % 5 === 0 && col("doc_id") < cap.toLong)
       case None => docs.where(col("doc_id") % 5 === 0)
     }
-    val store = java.nio.file.Files.createTempDirectory("banded-bench").toString
-    try {
+    try graft.Scratch.during("banded-bench") { store =>
       val (buildSec, _) = time {
         MinhashIndexStore.init(corpus, store, "doc_id", "text", shingleK = 5)
         0L
@@ -61,10 +60,6 @@ object BandedProbeBench {
         s""""batch_rows":${batch.count()},"pairs":$unifiedPairs,""" +
         s""""build_init_sec":$buildSec,"unified_probe_sec":$unifiedSec,""" +
         s""""banded_probe_sec":$bandedSec}""")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(store)).deleteRecursively()
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

@@ -102,8 +102,7 @@ object ChainReadBench {
   def main(args: Array[String]): Unit = {
     import graft.ops.{MinhashIndexStore, SemanticIndexStore}
     val (spark, dir) = BenchHarness.session(args, "/root/testdata/sf0.1")
-    val root = java.nio.file.Files.createTempDirectory("chain-bench").toString
-    try {
+    try graft.Scratch.during("chain-bench") { root =>
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       // fixed corpus across variants: half standing at init, the other
@@ -147,10 +146,6 @@ object ChainReadBench {
       val sem = Seq(1, 8, 32).map(semVariant).mkString("[", ",", "]")
       val mh = Seq(1, 8, 32).map(mhVariant).mkString("[", ",", "]")
       println(s"""{"dir":"$dir",$counts,"semantic":$sem,"minhash":$mh}""")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

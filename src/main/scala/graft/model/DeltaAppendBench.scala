@@ -63,8 +63,7 @@ object DeltaAppendBench {
     // the takedown slice: ~0.5% of each corpus, O(tombstones) to remove
     val removeDocs = docs.where(col("doc_id") % 200 === 1).select("doc_id")
     val removeEmb = emb.where(col("vec_id") % 200 === 1).select("vec_id")
-    val root = java.nio.file.Files.createTempDirectory("delta-bench").toString
-    try {
+    try graft.Scratch.during("delta-bench") { root =>
       val mh = lifecycle("minhash", s"$root/mh",
         () => MinhashIndexStore.init(standingDocs, s"$root/mh",
           "doc_id", "text"),
@@ -94,10 +93,6 @@ object DeltaAppendBench {
         s""""batch_docs":${batchDocs.count()},""" +
         s""""standing_vecs":${standingEmb.count()},""" +
         s""""batch_vecs":${batchEmb.count()},$mh,$sem,$ivf}""")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

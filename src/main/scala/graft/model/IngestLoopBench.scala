@@ -48,9 +48,8 @@ object IngestLoopBench {
 
   def main(args: Array[String]): Unit = {
     val (spark, dir) = BenchHarness.session(args, "/root/testdata/sf0.1")
-    val root = java.nio.file.Files.createTempDirectory("ingest-bench").toString
     val before = loadavg()
-    try {
+    try graft.Scratch.during("ingest-bench") { root =>
       val Batches = 8
       // batch slice geometry (see the object doc): batch b = ids with
       // id % denom == step*b + 1 — odd (disjoint from the even standing
@@ -141,10 +140,6 @@ object IngestLoopBench {
       println(s"""{"metric":"ingest_loop","sf":"$dir","batch_denom":$denom,""" +
         s""""load_before":$before,"load_after":${loadavg()},""" +
         s"""$mh,$sem,$ivf,$cur}""")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

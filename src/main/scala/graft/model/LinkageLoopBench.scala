@@ -69,9 +69,8 @@ object LinkageLoopBench {
 
   def main(args: Array[String]): Unit = {
     val (spark, _) = BenchHarness.session(args, "/root/testdata/sf0.1")
-    val root = java.nio.file.Files.createTempDirectory("linkage-bench").toString
     def r3(d: Double) = math.rint(d * 1000) / 1000
-    try {
+    try graft.Scratch.during("linkage-bench") { root =>
       locally { // warm-up lifecycle
         val d = freshStore(spark, root, "warm", 2000L)
         graft.ops.LinkageStore.append(spark, d,
@@ -119,10 +118,6 @@ object LinkageLoopBench {
           s"""{"standing":$s,"append_sec":$t}""" }.mkString(",")}],""" +
         s""""loop_batches_sec":[${loop.mkString(",")}],""" +
         s""""steady_batches":[${steady.mkString(",")}]}""")
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(root)).deleteRecursively()
-      spark.stop()
-    }
+    } finally spark.stop()
   }
 }

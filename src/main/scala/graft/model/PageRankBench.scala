@@ -34,14 +34,10 @@ object PageRankBench {
       (it, r3(sec), r3(sec / it))
     }
     val ckpt = Seq(3, 20, 80).map { it =>
-      val scratch = java.nio.file.Files.createTempDirectory("pr-bench").toString
-      try {
+      graft.Scratch.during("pr-bench") { scratch =>
         val (sec, _) = time(graft.ops.Graph.pageRankCheckpointed(
           edges, "src", "dst", it, scratch).count())
         (it, r3(sec), r3(sec / it))
-      } finally {
-        import scala.reflect.io.Directory
-        new Directory(new java.io.File(scratch)).deleteRecursively()
       }
     }
     def js(rows: Seq[(Int, Double, Double)]) = rows.map { case (it, s, per) =>

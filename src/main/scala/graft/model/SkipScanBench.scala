@@ -44,8 +44,7 @@ object SkipScanBench {
   def main(args: Array[String]): Unit = {
     val (spark, dir) = BenchHarness.session(args, "/root/testdata/sf0.1")
     val nFiles = args.drop(1).headOption.map(_.toInt).getOrElse(64)
-    val scratch = java.nio.file.Files.createTempDirectory("skip-scan-bench").toString
-    try {
+    graft.Scratch.during("skip-scan-bench") { scratch =>
       val events = Tables.load(spark, dir, "events")
         .select("event_id", "user_id", "event_type", "value")
       val (layoutS, _) = time {
@@ -118,9 +117,6 @@ object SkipScanBench {
         s""""point_kept_files":${bloomScan.keptFiles},""" +
         s""""scheduled":{"files":$bloomFiles,"bytes":$bloomScanBytes}}}""")
       spark.catalog.clearCache()
-    } finally {
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(scratch)).deleteRecursively(): Unit
     }
   }
 }

@@ -250,14 +250,16 @@ object AcceptedSink {
     * coherent (or when nothing was accepted). Catches what no verb can:
     * an externally rewritten archive version, a live directory written
     * by an older writer without the accept-time check. Footer reads
-    * only — O(versions + live dirs) metadata, no data pages. */
+    * only — O(versions + live dirs) metadata, no data pages — through
+    * the listing-signature schema memo, so a repeat audit of unchanged
+    * directories starts no Spark job while a rewrite is re-read. */
   def schemaCoherenceFindings(spark: SparkSession,
                               acceptedDir: String): Seq[String] =
     acceptedSchema(spark, acceptedDir).toSeq.flatMap { standing =>
       val root = archiveRoot(acceptedDir)
       val links = archiveChain(spark, acceptedDir)
       val archiveDrift = links.flatMap { w =>
-        val s = spark.read.parquet(s"$root/v=$w/data").schema
+        val s = VersionedState.cachedParquetSchema(spark, s"$root/v=$w/data")
         describeDrift(standing,
           org.apache.spark.sql.types.StructType(
             s.filterNot(_.name == "batch")), s"archive v=$w")
@@ -266,7 +268,7 @@ object AcceptedSink {
       val liveDrift = liveBatches(spark, acceptedDir)
         .filter(b => watermark.forall(b > _)).sorted.flatMap { b =>
           describeDrift(standing,
-            spark.read.parquet(s"$acceptedDir/batch=$b").schema,
+            VersionedState.cachedParquetSchema(spark, s"$acceptedDir/batch=$b"),
             s"live batch=$b")
         }
       archiveDrift ++ liveDrift
@@ -452,7 +454,7 @@ object AcceptedSink {
           .fromJson(receipt.select("new_schema").head().getString(0))
           .asInstanceOf[org.apache.spark.sql.types.StructType]
         describeDrift(declared,
-          spark.read.parquet(s"$root/v=$w/data").schema,
+          VersionedState.cachedParquetSchema(spark, s"$root/v=$w/data"),
           s"archive v=$w data")
           .map(drift => s"archive v=$w was committed by a migration " +
             s"declaring a new schema its data footers no longer carry " +

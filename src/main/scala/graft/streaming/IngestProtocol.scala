@@ -262,6 +262,17 @@ private[graft] object IngestProtocol {
     }
   }
 
+  /** Refuse a maintenance verb by name while `checkpointDir` holds a
+    * batch [[pendingReplay]]: `who` names the verb, `consequence` says
+    * what running it now would break and how to proceed. */
+  def requireNoPendingReplay(spark: SparkSession, checkpointDir: String,
+                             who: String, consequence: String): Unit =
+    pendingReplay(spark, checkpointDir).foreach { b =>
+      throw new IllegalStateException(
+        s"$who: checkpoint $checkpointDir holds batch $b pending replay " +
+          s"(offsets ahead of commits) — $consequence")
+    }
+
   /** Where a batch stands against its store: the head it found, the
     * base its ledger entry holds, and whether it is a replay. */
   final case class BatchBase(head: Long, base: Long, replay: Boolean) {

@@ -86,14 +86,11 @@ object LinkageIngestStream {
   def removeValues(spark: org.apache.spark.sql.SparkSession,
                    storeDir: String, checkpointDir: String,
                    removeValues: DataFrame): Long = {
-    IngestProtocol.pendingReplay(spark, checkpointDir).foreach { b =>
-      throw new IllegalStateException(
-        s"linkage takedown at $storeDir: checkpoint $checkpointDir holds " +
-          s"batch $b pending replay (offsets ahead of commits) — a head " +
-          "advance now would make the resumed batch read its own append " +
-          "as committed and skip it, silently never ingesting its values; " +
-          "let the stream drain the batch, then retry")
-    }
+    IngestProtocol.requireNoPendingReplay(spark, checkpointDir,
+      s"linkage takedown at $storeDir", "a head advance now would make " +
+        "the resumed batch read its own append as committed and skip it, " +
+        "silently never ingesting its values; let the stream drain the " +
+        "batch, then retry")
     val head = LinkageStore.latestVersion(spark, storeDir).getOrElse(
       throw new IllegalStateException(
         s"linkage takedown at $storeDir: no committed version — nothing " +

@@ -61,7 +61,30 @@ object TriadPipeline {
     * store's comparison parameters are persisted at init — these must
     * match them ([[graft.ops.LinkageStore]] owns every comparison). */
   final case class LinkageStage(valueCol: String, blockCols: Seq[String],
-                                maxDist: Int, compactEvery: Int = 8)
+                                maxDist: Int, compactEvery: Int = 8) {
+    /** The store's key columns: the block columns, then the value. */
+    def keyCols: Seq[String] = blockCols :+ valueCol
+  }
+
+  /** The linkage store's key domain over `rows`: DISTINCT keys with
+    * EVERY key column non-null, block columns included. The store's own
+    * joins (append's candidate blocks, remove's left_semi, the audit's
+    * containment) use null-dropping equality, so a null-block key can
+    * neither pair, nor be withdrawn, nor match its own store row. */
+  private def linkageKeys(rows: DataFrame, st: LinkageStage): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    rows.select(st.keyCols.map(col): _*)
+      .where(st.keyCols.map(col(_).isNotNull).reduce(_ && _))
+      .distinct()
+  }
+
+  /** Delete a store directory outright, ahead of its rebuild. */
+  private def wipe(spark: org.apache.spark.sql.SparkSession,
+                   dir: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(p, true): Unit
+  }
 
   /** Directory layout + knobs for one composed pipeline. `root` holds
     * `minhash-store`, `minhash-accepted`, `semantic-store`,
@@ -209,7 +232,7 @@ object TriadPipeline {
       "initLinkageStore: Config.linkage is unset — the pipeline has no " +
         "linkage tail stage to initialize"))
     val schema = org.apache.spark.sql.types.StructType(
-      (st.blockCols :+ st.valueCol).map(c =>
+      st.keyCols.map(c =>
         org.apache.spark.sql.types.StructField(c,
           org.apache.spark.sql.types.StringType)))
     val empty = spark.createDataFrame(
@@ -260,14 +283,11 @@ object TriadPipeline {
   def takedown(spark: org.apache.spark.sql.SparkSession, cfg: Config,
                removeIds: DataFrame): TakedownOutcome = {
     import graft.ops.{IvfIndexStore, MinhashIndexStore, SemanticIndexStore}
-    IngestProtocol.pendingReplay(spark, cfg.checkpointDir).foreach { b =>
-      throw new IllegalStateException(
-        s"triad takedown: checkpoint ${cfg.checkpointDir} holds batch $b " +
-          "pending replay (offsets ahead of commits) — advancing a store " +
-          "head now would make the resumed batch read its own append as " +
-          "committed and skip it, silently never ingesting its documents; " +
-          "let the stream drain the batch, then retry")
-    }
+    IngestProtocol.requireNoPendingReplay(spark, cfg.checkpointDir,
+      "triad takedown", "advancing a store head now would make the " +
+        "resumed batch read its own append as committed and skip it, " +
+        "silently never ingesting its documents; let the stream drain the " +
+        "batch, then retry")
     def headOf(store: graft.ops.VersionedStore, what: String, dir: String): Long =
       store.latestVersion(spark, dir).getOrElse(throw new IllegalStateException(
         s"triad takedown: $what $dir has no committed version — the pipeline " +
@@ -292,22 +312,15 @@ object TriadPipeline {
       if (!AcceptedSink.hasAccepted(spark, cfg.semanticAccepted)) None
       else {
         val head = headOf(LinkageStore, "linkage store", cfg.linkageDir)
-        val keyCols = st.blockCols :+ st.valueCol
         val corpus = AcceptedSink.readAccepted(spark, cfg.semanticAccepted)
-        // EVERY key column filtered non-null, block columns included:
-        // the store's own joins (append's candidate blocks, remove's
-        // left_semi) use null-dropping equality, so a null-block key can
-        // neither pair nor be withdrawn — deriving one would be a
-        // guaranteed no-op, and the null-missed anti-join below would
-        // hand the removal exactly that no-op frame
-        def vals(rows: DataFrame): DataFrame = rows
-          .select(keyCols.map(org.apache.spark.sql.functions.col): _*)
-          .where(keyCols.map(org.apache.spark.sql.functions.col(_).isNotNull)
-            .reduce(_ && _))
-          .distinct()
-        val gone = vals(corpus.join(removeIds, Seq(cfg.idCol), "left_semi"))
-          .join(vals(corpus.join(removeIds, Seq(cfg.idCol), "left_anti")),
-            keyCols, "left_anti")
+        // keys in the store's domain only: deriving a null-block key
+        // would be a guaranteed no-op, and the null-missed anti-join
+        // below would hand the removal exactly that no-op frame
+        val gone =
+          linkageKeys(corpus.join(removeIds, Seq(cfg.idCol), "left_semi"), st)
+            .join(linkageKeys(
+              corpus.join(removeIds, Seq(cfg.idCol), "left_anti"), st),
+              st.keyCols, "left_anti")
         Some(LinkageStore.remove(spark, cfg.linkageDir, gone, head))
       }
     }.getOrElse(None)
@@ -360,24 +373,16 @@ object TriadPipeline {
                           cfg: Config, semanticNlist: Int = 0,
                           ivfNlist: Int = 16): RetrainOutcome = {
     import graft.ops.{IvfIndexStore, SemanticIndexStore}
-    IngestProtocol.pendingReplay(spark, cfg.checkpointDir).foreach { b =>
-      throw new IllegalStateException(
-        s"triad retrain: checkpoint ${cfg.checkpointDir} holds batch $b " +
-          "pending replay (offsets ahead of commits) — on resume it would " +
-          "fresh-record a ledger base against the rebuilt store and " +
-          "re-append documents the rebuild corpus already absorbed; let " +
-          "the stream finish (or drain) the batch, then retrain")
-    }
+    IngestProtocol.requireNoPendingReplay(spark, cfg.checkpointDir,
+      "triad retrain", "on resume it would fresh-record a ledger base " +
+        "against the rebuilt store and re-append documents the rebuild " +
+        "corpus already absorbed; let the stream finish (or drain) the " +
+        "batch, then retrain")
     val corpus = AcceptedSink.readAccepted(spark, cfg.semanticAccepted)
       .select(cfg.idCol, cfg.vecCol).cache()
     val rows = corpus.count()
-    def wipe(dir: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true): Unit
-    }
-    wipe(cfg.semanticDir)
-    wipe(cfg.ivfDir)
+    wipe(spark, cfg.semanticDir)
+    wipe(spark, cfg.ivfDir)
     val sem = SemanticIndexStore.init(corpus, cfg.semanticDir,
       cfg.idCol, cfg.vecCol, nlist = semanticNlist)
     val ivf = IvfIndexStore.init(corpus, cfg.ivfDir,
@@ -496,14 +501,11 @@ object TriadPipeline {
                     ivfNlist: Int = 16): CorpusMigrationOutcome = {
     import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    IngestProtocol.pendingReplay(spark, cfg.checkpointDir).foreach { b =>
-      throw new IllegalStateException(
-        s"triad migration: checkpoint ${cfg.checkpointDir} holds batch $b " +
-          "pending replay (offsets ahead of commits) — a store rebuild " +
-          "now would make the resumed batch fresh-record its base against " +
-          "rebuilt state and re-append documents the rebuild corpus " +
-          "already absorbed; let the stream drain the batch, then migrate")
-    }
+    IngestProtocol.requireNoPendingReplay(spark, cfg.checkpointDir,
+      "triad migration", "a store rebuild now would make the resumed " +
+        "batch fresh-record its base against rebuilt state and re-append " +
+        "documents the rebuild corpus already absorbed; let the stream " +
+        "drain the batch, then migrate")
     val dedupHas = AcceptedSink.hasAccepted(spark, cfg.minhashAccepted)
     val semHas = AcceptedSink.hasAccepted(spark, cfg.semanticAccepted)
     require(dedupHas || semHas,
@@ -549,8 +551,7 @@ object TriadPipeline {
     requireKept(cfg.textCol, "dedup stage")
     requireKept(cfg.vecCol, "vector stages")
     cfg.linkage.foreach { st =>
-      (st.blockCols :+ st.valueCol).foreach(
-        requireKept(_, "linkage tail stage"))
+      st.keyCols.foreach(requireKept(_, "linkage tail stage"))
     }
 
     // ---- fold, checksum, migrate each sink ---------------------------
@@ -566,22 +567,13 @@ object TriadPipeline {
     val vecBefore = if (semHas) Some(contentChecksum(
       AcceptedSink.readAccepted(spark, cfg.semanticAccepted),
       Seq(cfg.idCol, cfg.vecCol))) else None
-    // the linkage checksum reads the store's own resolution domain:
-    // DISTINCT keys, every key column non-null (the store's equality
-    // domain — the [[takedown]] derivation's filter)
-    def linkKeys(): DataFrame = {
-      val st = cfg.linkage.get
-      val keyCols = st.blockCols :+ st.valueCol
-      AcceptedSink.readAccepted(spark, cfg.semanticAccepted)
-        .select(keyCols.map(col): _*)
-        .where(keyCols.map(col(_).isNotNull).reduce(_ && _))
-        .distinct()
-    }
+    // the linkage checksum reads the store's own resolution domain
+    def linkKeys(): DataFrame = linkageKeys(
+      AcceptedSink.readAccepted(spark, cfg.semanticAccepted), cfg.linkage.get)
     val linkActive = cfg.linkage.nonEmpty && semHas &&
       graft.ops.LinkageStore.latestVersion(spark, cfg.linkageDir).nonEmpty
     val linkBefore = if (linkActive)
-      Some(contentChecksum(linkKeys(), cfg.linkage.get.blockCols :+
-        cfg.linkage.get.valueCol)) else None
+      Some(contentChecksum(linkKeys(), cfg.linkage.get.keyCols)) else None
 
     val dedupMig = if (dedupHas)
       Some(AcceptedSink.migrateArchive(spark, cfg.minhashAccepted, migrate))
@@ -591,11 +583,6 @@ object TriadPipeline {
     else None
 
     // ---- rebuild exactly the stores whose inputs changed -------------
-    def wipe(dir: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(p, true): Unit
-    }
     val mhChanged = dedupHas && mhBefore != Some(contentChecksum(
       AcceptedSink.readAccepted(spark, cfg.minhashAccepted),
       Seq(cfg.idCol, cfg.textCol)))
@@ -605,7 +592,7 @@ object TriadPipeline {
       // the stage-1 accepted corpus: the retrain doctrine's corpus
       // (init-time standing docs were never accepted and drop out)
       val meta = graft.ops.MinhashIndexStore.read(spark, cfg.minhashDir).meta
-      wipe(cfg.minhashDir)
+      wipe(spark, cfg.minhashDir)
       graft.ops.MinhashIndexStore.init(
         AcceptedSink.readAccepted(spark, cfg.minhashAccepted),
         cfg.minhashDir, cfg.idCol, cfg.textCol, meta.shingleK,
@@ -618,16 +605,15 @@ object TriadPipeline {
       Some(retrainVectorStores(spark, cfg, semanticNlist, ivfNlist))
     else None
     val linkRebuilt = if (!linkActive) None else {
-      val st = cfg.linkage.get
       val changed = linkBefore != Some(contentChecksum(linkKeys(),
-        st.blockCols :+ st.valueCol))
+        cfg.linkage.get.keyCols))
       if (changed) {
         // born-empty plus ONE whole-corpus append — the rebuild shape
         // that keeps the sink the exact carrier-of-record (a raw
         // LinkageStore.init over the corpus would break the takedown
         // derivation's birth assumption only notionally — the content
         // is identical — but the runbook keeps the doctrine uniform)
-        wipe(cfg.linkageDir)
+        wipe(spark, cfg.linkageDir)
         initLinkageStore(spark, cfg): Unit
         graft.ops.LinkageStore.append(spark, cfg.linkageDir,
           AcceptedSink.readAccepted(spark, cfg.semanticAccepted),
@@ -1002,21 +988,15 @@ object TriadPipeline {
       cfg.linkage.foreach { st =>
         if (AcceptedSink.hasAccepted(spark, cfg.semanticAccepted))
           checked("linkage store") {
-            val keyCols = st.blockCols :+ st.valueCol
-            // the same every-key-column null filter as [[takedown]]'s
-            // derivation: the containment join is null-dropping, so a
-            // null-block accepted key could never match the store's own
-            // row and would report a PERSISTENT false-positive error
-            // here (null-block keys sit outside the store's equality
-            // domain on every path — append, remove, and this audit)
-            val vals = AcceptedSink.readAccepted(spark, cfg.semanticAccepted)
-              .select(keyCols.map(col): _*)
-              .where(keyCols.map(col(_).isNotNull).reduce(_ && _))
-              .distinct()
+            // keys in the store's domain only: a null-block accepted
+            // key could never match the store's own row and would
+            // report a PERSISTENT false-positive error here
+            val vals = linkageKeys(
+              AcceptedSink.readAccepted(spark, cfg.semanticAccepted), st)
             val lost = vals.join(
               graft.ops.LinkageStore.labels(spark, cfg.linkageDir)
-                .select(keyCols.map(col): _*),
-              keyCols, "left_anti")
+                .select(st.keyCols.map(col): _*),
+              st.keyCols, "left_anti")
               .limit(6).collect()
               .map(_.toSeq.mkString("/"))
             if (lost.nonEmpty) finding("linkage store", "error",

@@ -3626,4 +3626,25 @@ class OpsSpec extends SparkSpec {
       df.where(col("corpus_id") < 4000), nlist = 16, lloydIters = 0)
     assert(tiny.length === 4, s"expected the 4 inherent seeds, got ${tiny.length}")
   }
+
+  test("Scratch.during returns the body's value and always deletes its directory") {
+    var seen = ""
+    val out = Scratch.during("ops-spec-scratch") { d =>
+      seen = d
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d, "a", "b"))
+      java.nio.file.Files.write(java.nio.file.Paths.get(d, "a", "b", "f"), Array[Byte](1))
+      42
+    }
+    assert(out === 42)
+    assert(seen.nonEmpty && !new java.io.File(seen).exists(), seen)
+    val e = intercept[IllegalStateException] {
+      Scratch.during("ops-spec-scratch") { d =>
+        seen = d
+        java.nio.file.Files.write(java.nio.file.Paths.get(d, "f"), Array[Byte](1))
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(e.getMessage === "body failed")
+    assert(!new java.io.File(seen).exists(), seen)
+  }
 }

@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import graft.SparkSpec
@@ -33,6 +37,35 @@ class AcceptedSchemaSpec extends SparkSpec {
 
   private def failure(body: => Unit): String =
     intercept[IllegalArgumentException](body).getMessage
+
+  /** `body`'s value and the number of Spark jobs it started under a
+    * caller-thread job tag, counted once the listener has seen them
+    * all (a marker job's start closes the window: the bus delivers in
+    * order). */
+  private def taggedJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val tag = s"accepted-schema-${System.nanoTime()}"
+    val marker = s"$tag-marker"
+    val jobs = new AtomicInteger
+    val markerSeen = new CountDownLatch(1)
+    def prop(e: SparkListenerJobStart, key: String): Set[String] =
+      Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+        .map(_.split(',').toSet).getOrElse(Set.empty)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (prop(e, "spark.jobGroup.id").contains(marker)) markerSeen.countDown()
+        else if (prop(e, "spark.job.tags").contains(tag)) jobs.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.addJobTag(tag)
+      val out = try body finally sc.removeJobTag(tag)
+      sc.setJobGroup(marker, "listener drain marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("first accept establishes the schema; a matching batch passes in any column order") {
     withDir { acc =>
@@ -125,6 +158,25 @@ class AcceptedSchemaSpec extends SparkSpec {
       // refused at accept time: no batch=1 directory was created
       assert(AcceptedSink.liveBatchIds(spark, acc).toSet === before,
         "a refused batch must leave the sink untouched")
+    }
+  }
+
+  test("a repeat schema-coherence audit of an unchanged sink starts no Spark job") {
+    withDir { acc =>
+      writeBatch(acc, 0L, batchDf(1L, 2L))
+      AcceptedSink.fold(spark, acc, belowBatch = 1L)
+      writeBatch(acc, 1L, batchDf(3L))
+      AcceptedSink.fold(spark, acc, belowBatch = 2L)
+      writeBatch(acc, 2L, batchDf(4L))
+      assert(AcceptedSink.archiveChain(spark, acc).size === 2)
+      assert(AcceptedSink.liveBatchIds(spark, acc) === Seq(2L))
+      assert(AcceptedSink.schemaCoherenceFindings(spark, acc).isEmpty)
+      // every archive link's and live directory's schema comes from the
+      // listing-signature memo: nothing changed, so nothing is inferred
+      val (findings, jobs) =
+        taggedJobs(AcceptedSink.schemaCoherenceFindings(spark, acc))
+      assert(findings.isEmpty)
+      assert(jobs === 0, s"the repeat audit started $jobs Spark job(s)")
     }
   }
 }
